@@ -25,13 +25,8 @@ import graft.ql.QueryGuard
   */
 object Pipeline {
 
-  /** Schemas of the tables this pipeline itself writes, pinned so the
-    * re-reads skip footer inference (the write fully determines them).
-    * part_month is the Hive partition column of the month layout. */
-  val SilverSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "pk BIGINT, status STRING, price DOUBLE, updated_epoch BIGINT, " +
-        "updated_ts TIMESTAMP, part_month STRING")
+  /** Schema of the gold table this pipeline itself writes, pinned so the
+    * re-reads skip footer inference (the write fully determines it). */
   val GoldSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
       "pk BIGINT, status STRING, price DOUBLE, updated_epoch BIGINT, " +
@@ -139,6 +134,18 @@ object Pipeline {
         unix_timestamp(try_to_timestamp(col("ORDER_DATE"),
           lit("yyyy-MM-dd HH:mm:ss"))).as("updated_epoch"))
 
+    // merge into the silver target (previous state: 3/4 of orders, stale
+    // where key%7==0) with op classification
+    lazy val merged = {
+      val target = Tables(spark, sfDir, "orders")
+        .filter(col("o_orderkey") % 4 =!= 0)
+        .select(col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
+          col("o_totalprice").as("price"),
+          (unix_timestamp(col("o_orderdate")) -
+            when(col("o_orderkey") % 7 === 0, 86400L).otherwise(0L)).as("updated_epoch"))
+      MergeKernels.upsertClassify(target, conformed, Seq("pk")).cache()
+    }
+
     Seq(
       Orchestrator.Block("land", () => {
         val (total, corrupt) = landCounts
@@ -149,18 +156,17 @@ object Pipeline {
         log += "conform" -> s"${landCounts._1 - landCounts._2} rows typed"
       }),
 
-      // merge into the silver target (previous state: 3/4 of orders,
-      // stale where key%7==0), classify ops, persist
+      // persist the merge; `merged` stays cached for the gold block,
+      // which releases it
       Orchestrator.Block("merge", () => {
-        val target = Tables(spark, sfDir, "orders")
-          .filter(col("o_orderkey") % 4 =!= 0)
-          .select(col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
-            col("o_totalprice").as("price"),
-            (unix_timestamp(col("o_orderdate")) -
-              when(col("o_orderkey") % 7 === 0, 86400L).otherwise(0L)).as("updated_epoch"))
-        val merged = MergeKernels.upsertClassify(target, conformed, Seq("pk")).cache()
+        // this collect also materialises the `merged` cache, which
+        // Layout.writePartitionedByMonth needs: its partition-count pin
+        // reads the plan's size estimate, and a cached relation reports
+        // its real in-memory size only once built
         val stats = merged.groupBy("op").count().collect()
           .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
+        // `merged` is built, so nothing reads `landed` again
+        landed.unpersist()
         // round-10 default layout: silver lands MONTH-PARTITIONED on the
         // modification time and pk-SORTED within each month — the Spark
         // analog of the reference's COALESCE(date_modified, date_created)
@@ -172,7 +178,6 @@ object Pipeline {
           merged.drop("op")
             .withColumn("updated_ts", timestamp_seconds(col("updated_epoch"))),
           "updated_ts", silverPath, sortCols = Seq("pk"))
-        merged.unpersist()
         log += "merge" -> stats
       }),
 
@@ -180,10 +185,10 @@ object Pipeline {
       // the reference's master lists view refreshes redundantly — a
       // second occurrence in one run must dedupe, not rebuild)
       Orchestrator.Block("gold", () => {
-        // schema pinned: the silver table was written two blocks ago with
-        // a schema this code fully determines — a bare read pays a
-        // footer-inference job over every part file (one per month here)
-        val silver = spark.read.schema(SilverSchema).parquet(silverPath)
+        // silver's rows straight from the merge block's cache: re-reading
+        // the table just written would list its ~80 month directories
+        // (one Spark job past 32 paths) and scan every file again
+        val silver = merged.drop("op")
         // keyed fan-out (size-gated no-op at scale): AQE's byte-based
         // coalescing shrank this rollup's exchange to 3 tasks — byte-light
         // but CPU-dense, and it feeds a broadcast build on the join below
@@ -200,6 +205,7 @@ object Pipeline {
             coalesce(col("li_count"), lit(0L)).as("li_count"),
             coalesce(col("qty_tot"), lit(0L)).as("qty_tot"))
         WriteOptimizer.sizedWrite(gold, goldPath, sortCols = Seq("pk"))
+        merged.unpersist()
         // row count from the parquet footers the write just produced —
         // metadata, zero Spark jobs (same discipline as the streaming
         // maintainers' per-batch metrics)

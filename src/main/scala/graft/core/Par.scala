@@ -11,7 +11,9 @@ package graft.core
   * A fresh bounded pool per call: the thunk count is tiny (2-4), pool
   * setup is microseconds next to a Spark job, and tearing it down keeps
   * no idle threads alive between batches. Failures propagate: the first
-  * thunk exception rethrows after the pool drains.
+  * failing thunk's exception (in argument order) rethrows only after
+  * every thunk has finished, so no sibling write is still running when
+  * the caller recovers.
   */
 object Par {
 
@@ -25,13 +27,14 @@ object Par {
             override def call(): T = t()
           })
         }
-        futures.map { f =>
-          try f.get()
+        val outcomes = futures.map { f =>
+          try Right(f.get())
           catch {
             case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
+              Left(Option(e.getCause).getOrElse(e))
           }
-        }.toSeq
+        }
+        outcomes.map(_.fold(e => throw e, identity)).toSeq
       } finally { pool.shutdown(); () }
     }
 }

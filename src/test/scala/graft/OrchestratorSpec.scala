@@ -73,7 +73,10 @@ class OrchestratorSpec extends SparkTestBase {
 
   test("the five-stage pipeline runs through the orchestrator: dedup'd gold, clean log") {
     val work = java.nio.file.Files.createTempDirectory("graft-master").toString
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val (report, log) = Pipeline.runMaster(spark, sf0001, work, sleeper = _ => ())
+    // every cache the run builds is released by the run
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == persisted)
     assert(report.acquired && report.succeeded, report.toString)
     assert(report.blocks.map(b => (b.name, b.status)) == Seq(
       ("land", "ok"), ("conform", "ok"), ("merge", "ok"),

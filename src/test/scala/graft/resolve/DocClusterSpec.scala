@@ -1,9 +1,69 @@
 package graft.resolve
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
 import graft.SparkTestBase
 
 class DocClusterSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** Plain union-find: node → minimum node of its component. */
+  private def reference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(n => n -> find(n)).toMap
+  }
+
+  /** Runs `body` with `n` shuffle partitions and AQE coalescing off, so
+    * the seed pass really splits the edges `n` ways. */
+  private def withPartitions[A](n: Int)(body: => A): A = {
+    val settings = Seq("spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def assertMatchesReference(edges: Seq[(Long, Long)]): Unit = {
+    val rows = DocCluster.connectedComponents(edges.toDF("a", "b")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.length == rows.map(_._1).distinct.length, "one row per node")
+    assert(rows.toMap == reference(edges))
+  }
+
+  // ids spread over the long range, so a node-id truncation shows
+  private val randomGraph: Gen[Seq[(Long, Long)]] = for {
+    n <- Gen.choose(2, 60)
+    m <- Gen.choose(0, 80)
+    es <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
+  } yield es.map { case (a, b) => (a * 7919L * 1000003L, b * 7919L * 1000003L) }
+
+  for (parts <- Seq(1, 8)) {
+    test(s"seeded random graphs match a union-find reference ($parts shuffle partitions)") {
+      withPartitions(parts) {
+        (1L to 6L).foreach { s =>
+          assertMatchesReference(randomGraph(Gen.Parameters.default, Seed(s)).get)
+        }
+      }
+    }
+
+    test(s"a chain spread over partitions converges to its minimum ($parts shuffle partitions)") {
+      // the edges of consecutive links hash to different partitions, so
+      // the seed's local roots conflict and the rounds must finish it
+      val chain = new scala.util.Random(7)
+        .shuffle((1L until 64L).map(i => if (i % 2 == 0) (i, i + 1) else (i + 1, i)))
+      withPartitions(parts)(assertMatchesReference(chain))
+    }
+  }
 
   test("connected components: chains merge transitively, components stay separate") {
     // 1-2-3-4 chain, {10,11}, {20,21,22} via shared hub
