@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Sessions
 
 /** Incremental-refresh vs full-rebuild crossover measurement.
   *
@@ -31,16 +33,7 @@ object CrossoverBench {
     val fractions = args.headOption
       .map(_.split(",").map(_.toDouble).toSeq)
       .getOrElse(Seq(0.01, 0.05, 0.10, 0.25, 0.50))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val dir = ScaleCanary.derived(spark, 10)
     def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
@@ -60,18 +53,13 @@ object CrossoverBench {
           .otherwise(col("l_quantity")))
       (ord, li)
     }
-    def cleanup(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     def time(mk: () => DataFrame): Double = {
-      mk().write.format("noop").mode("overwrite").save(); cleanup() // warmup
+      mk().write.format("noop").mode("overwrite").save(); Sessions.release(spark) // warmup
       (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         mk().write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        cleanup(); dt
+        Sessions.release(spark); dt
       }.min
     }
     def fmt(d: Double) =

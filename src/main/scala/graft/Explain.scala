@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+
+import graft.core.Sessions
 
 /** Plan-audit helper.
   * `runMain graft.Explain [sfDir] [name ...]` — formatted physical plan
@@ -34,15 +35,7 @@ object Explain {
     val rest = args.filterNot(a => a == "--summary" || a == "--fallbacks")
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val names = rest.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "1"))
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val picked = SparkEntry.all.filter(q => names.isEmpty || names.contains(q.name))
     if (fallbacks) {
@@ -64,10 +57,7 @@ object Explain {
           if (fb.nonEmpty) println(s"${q.name}: ${fb.mkString(", ")}")
         } catch { case e: Throwable =>
           println(s"${q.name}: ERROR ${e.getMessage.take(100)}")
-        } finally {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+        } finally Sessions.release(spark)
       }
     } else if (summary) {
       println("| query | shuffles | single-part | broadcasts | scans | pushed-filter scans |")

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Sessions
 
 /** Work-growth probe for the heavy dedup family (round-11, VERDICT r10
   * ask #3): for each query still above ~15× at the 100× canary, measure
@@ -24,15 +25,7 @@ object GrowthProbe {
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("spark.sql.shuffle.partitions" -> "256")
 
     val base = "/root/testdata/sf0.1"
     val scaled = ScaleCanary.derived(spark, factor)

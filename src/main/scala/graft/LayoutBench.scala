@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Sessions
 
 /** Physical-layout measurement: the §4 partition-pruning claim as a
   * NUMBER, not prose. LayoutSpec already pins the plan shape (date
@@ -23,15 +25,7 @@ import org.apache.spark.sql.functions._
 object LayoutBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val dir = ScaleCanary.derived(spark, 10)
     val flatPath = s"$dir/lineitem.parquet"

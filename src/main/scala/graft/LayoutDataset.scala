@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Layout, Tables}
+import graft.core.{Layout, Sessions, Tables}
 
 /** Round-10 ask #7: a month-partitioned+sorted variant of an sf dir, so
   * the FULL inventory bench can run against the Layout silver the
@@ -55,15 +55,7 @@ object LayoutDataset {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     println(s"[layout-dataset] ready: ${build(spark, base)}")
     spark.stop()
   }

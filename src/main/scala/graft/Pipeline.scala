@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WriteOptimizer}
+import graft.core.{Sessions, Tables, WriteOptimizer}
 import graft.ingest.RawZone
 import graft.merge.MergeKernels
 import graft.ql.QueryGuard
@@ -36,14 +36,7 @@ object Pipeline {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = args.lift(1).getOrElse(
       Files.createTempDirectory("graft-pipeline").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     run(spark, sfDir, workDir).foreach { case (stage, detail) =>
       println(f"[pipeline] $stage%-10s $detail")
     }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
+
 /** Scale canary: a MEASURED datapoint behind the 100×-scale plan claims.
   *
   * The shipped testdata tops out at sf0.1, so the canary derives scaled
@@ -166,20 +168,13 @@ object ScaleCanary {
       if (sweep || deep100) 0 else args.headOption.map(_.toInt).getOrElse(20)
     val explicitNames: Option[Seq[String]] =
       if (!sweep && args.length > 1) Some(args(1).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val spark = Sessions.local(
       // zstd shuffle/spill compression (round-11): the 100× fat-MV runs
       // spill tens of GB; zstd roughly halves lz4's on-disk footprint for
       // the rendered-JSON gold rows at similar CPU. The common production
       // choice at this scale, and both scales of every ratio measure under
       // the same codec so rows stay self-consistent.
-      .config("spark.io.compression.codec", "zstd")
+      "spark.io.compression.codec" -> "zstd",
       // Vectorized-reader batches sized for FAT-STRING rows (round-11):
       // the default 4096-row batch asked for a 117 MB contiguous buffer
       // per string column when reading the 100× gold snapshot (~30 KB
@@ -187,15 +182,11 @@ object ScaleCanary {
       // such columns OOMed a 48 GB heap. 512 rows ≈ 15 MB per column
       // batch — the same "size batches to the data" rule the brief
       // applies to shuffle partitions.
-      .config("spark.sql.parquet.columnarReaderBatchSize", "512")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.parquet.columnarReaderBatchSize" -> "512")
 
     val byName = SparkEntry.all.map(q => q.name -> q.run).toMap
     def cleanup(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Sessions.release(spark)
       // ContextCleaner drops shuffle files only when the JVM GCs the
       // dependency objects — at 100× one fat-MV run spills tens of GB,
       // and three un-GCed runs filled the disk (measured: ENOSPC on the
@@ -233,10 +224,11 @@ object ScaleCanary {
       // ~800 MB/task, which starves stages that stack several sorters in
       // one task. A real 100×-sized cluster would run thousands of
       // partitions; 256 here keeps per-task state at base-scale levels.
-      val scaledParts = if (factor >= 100) "256" else "32"
+      val baseParts = spark.conf.get("spark.sql.shuffle.partitions")
+      val scaledParts = if (factor >= 100) "256" else baseParts
       def withParts(parts: String)(body: => Double): Double = {
         spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try body finally spark.conf.set("spark.sql.shuffle.partitions", "32")
+        try body finally spark.conf.set("spark.sql.shuffle.partitions", baseParts)
       }
       val acc = scala.collection.mutable.ArrayBuffer[String](seed: _*)
       names.filter(byName.contains).foreach { name =>

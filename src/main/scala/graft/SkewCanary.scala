@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Sessions
 
 /** Planted-skew canary for the capped gold MV (round-11, VERDICT r10 ask
   * #6): `mv_firs_capped` is oracle-gated on uniform data, but the POINT of
@@ -33,15 +34,7 @@ object SkewCanary {
 
   def main(args: Array[String]): Unit = {
     val megaChildren = args.headOption.map(_.toInt).getOrElse(100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val dir = ScaleCanary.derived(spark, 10)
     val base = spark.read.parquet(s"$dir/lineitem.parquet")

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
@@ -282,42 +281,4 @@ object NativeExpressions {
     column(NGrams(expression(words), n))
   def minhash_sig_native(shingles: Column): Column =
     column(MinHashSig(expression(shingles)))
-}
-
-/** SparkSessionExtensions hook: `.withExtensions(new GraftExtensions)`
-  * (or spark.sql.extensions=graft.functions.GraftExtensions) registers
-  * the native functions for the SQL surface. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("uuid_v5_native"),
-      new ExpressionInfo(classOf[NativeExpressions.UuidV5].getName, "uuid_v5_native"),
-      (children: Seq[Expression]) => NativeExpressions.UuidV5(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("trigram_sim_native"),
-      new ExpressionInfo(classOf[NativeExpressions.TrigramSimilarity].getName,
-        "trigram_sim_native"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => NativeExpressions.TrigramSimilarity(a, b)
-        case other => throw new IllegalArgumentException(
-          s"trigram_sim_native expects 2 arguments, got ${other.size}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_native"),
-      new ExpressionInfo(classOf[NativeExpressions.DotProduct].getName, "dot_native"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => NativeExpressions.DotProduct(a, b)
-        case other => throw new IllegalArgumentException(
-          s"dot_native expects 2 arguments, got ${other.size}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("jaro_winkler_native"),
-      new ExpressionInfo(classOf[NativeExpressions.JaroWinkler].getName,
-        "jaro_winkler_native"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => NativeExpressions.JaroWinkler(a, b)
-        case other => throw new IllegalArgumentException(
-          s"jaro_winkler_native expects 2 arguments, got ${other.size}")
-      }))
-  }
 }

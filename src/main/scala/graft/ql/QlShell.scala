@@ -2,6 +2,7 @@ package graft.ql
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Sessions
 import graft.functions.Udfs
 
 /** CLI face of the query surface: validate + execute one SQL statement
@@ -23,13 +24,7 @@ object QlShell {
     val args = rawArgs.filterNot(a => a == "--present" || a == "--mongo")
     val dir = args(0)
     def startSpark(): SparkSession = {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
+      val s = Sessions.local()
       s.sparkContext.setLogLevel("ERROR")
       Udfs.register(s)
       s

@@ -36,10 +36,9 @@ object DocPipeline {
     base.unionByName(variants)
   }
 
-  /** dd31's tokenized corpus — shared with the canary probes
-    * (GrowthProbe, Dd31Profile) so a fixture change here is the ONLY
-    * place it can happen; the probes measure this pipeline by
-    * construction, not by copy. */
+  /** dd31's tokenized corpus — shared with the GrowthProbe canary so a
+    * fixture change here is the ONLY place it can happen; the probe
+    * measures this pipeline by construction, not by copy. */
   private[graft] def dd31Tok(s: SparkSession, dir: String): DataFrame =
     // fan the tokenized rows out before the 8-gram explode: the shingle
     // expansion is the pipeline's dominant per-row work and otherwise

@@ -3,25 +3,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Sessions
+
 /** Shared session for all specs — one JVM-wide SparkSession (forked test
-  * JVM), UTC, small shuffle parallelism for test speed.
+  * JVM) from the production factory, small shuffle parallelism for test
+  * speed.
   */
 object TestSpark {
+  // local[4] whatever the host: the plan-shape specs assume 4 cores
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // sort-based shuffle always: one file per map task instead of one
-      // per reduce partition (no-op above 200 partitions; see Bench)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.warehouse.dir",
+    val s = Sessions.local(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .appName("graft-test")
-      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

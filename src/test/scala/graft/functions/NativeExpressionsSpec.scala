@@ -40,16 +40,7 @@ class NativeExpressionsSpec extends SparkTestBase {
   }
 
   test("extensions registration exposes the functions to SQL") {
-    // register through the runtime registry for the active session
-    val reg = spark.sessionState.functionRegistry
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    if (!reg.functionExists(FunctionIdentifier("uuid_v5_native"))) {
-      reg.createOrReplaceTempFunction("uuid_v5_native",
-        (children) => NativeExpressions.UuidV5(children.head), "scala_udf")
-      reg.createOrReplaceTempFunction("trigram_sim_native",
-        (children) => NativeExpressions.TrigramSimilarity(children.head, children(1)),
-        "scala_udf")
-    }
+    Udfs.register(spark)
     val r = spark.sql(
       "SELECT uuid_v5_native('example.com') AS u, trigram_sim_native('word','words') AS t")
       .collect().head
