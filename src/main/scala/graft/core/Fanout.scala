@@ -61,12 +61,18 @@ object Fanout {
       }
     })
 
+  /** The size gate: `bytes` cannot fill the session's parallelism at
+    * `spark.graft.fanout.bytesPerTask` (default 64 MB) per task. */
+  def belowTaskBudget(spark: SparkSession, bytes: BigInt): Boolean = {
+    val perTask = spark.conf
+      .get("spark.graft.fanout.bytesPerTask", (64L * 1024 * 1024).toString).toLong
+    bytes < BigInt(perTask) * spark.sparkContext.defaultParallelism
+  }
+
   private def isSmall(spark: SparkSession, dir: String,
                       tables: Seq[String]): Boolean = {
     val target = spark.sparkContext.defaultParallelism
-    val perTask = spark.conf
-      .get("spark.graft.fanout.bytesPerTask", (64L * 1024 * 1024).toString).toLong
-    tables.map(tableBytes(spark, dir, _)).sum < perTask * target ||
+    belowTaskBudget(spark, tables.map(tableBytes(spark, dir, _)).sum) ||
       // row-group gate (round-12): parquet row groups are the minimum
       // split unit, so a mid-scale table whose BYTES clear the threshold
       // but which packed into fewer row groups than the session's

@@ -29,9 +29,20 @@ object Layout {
     *   then prune key-bounded scans inside a month the way the partition
     *   value prunes across months. */
   def writePartitionedByMonth(df: DataFrame, tsCol: String, path: String,
-      filesPerMonth: Int = 1, sortCols: Seq[String] = Nil): Unit = {
+      filesPerMonth: Int = 1, sortCols: Seq[String] = Nil): Unit =
+    clusteredByMonth(df, tsCol, filesPerMonth, sortCols)
+      .write.mode("overwrite").partitionBy("part_month").parquet(path)
+
+  /** The rows `writePartitionedByMonth` writes: `df` plus `part_month`,
+    * clustered on it and sorted within each partition. */
+  private[core] def clusteredByMonth(df: DataFrame, tsCol: String,
+      filesPerMonth: Int, sortCols: Seq[String]): DataFrame = {
     require(filesPerMonth >= 1, s"filesPerMonth must be >= 1: $filesPerMonth")
     val d = df.withColumn("part_month", date_format(col(tsCol), "yyyy-MM"))
+    val keys =
+      if (filesPerMonth == 1) Seq(col("part_month"))
+      else Seq(col("part_month"),
+        pmod(hash(struct(df.columns.map(col): _*)), lit(filesPerMonth)))
     // Size-gated partition-count pin (round-12, the Fanout.keyed
     // discipline): the clustering exchange is byte-light but CPU-dense
     // (per-month sort + one parquet writer per month per task), and
@@ -43,28 +54,12 @@ object Layout {
     // the size gate the count is left to AQE, which at scale sizes the
     // exchange by bytes as it should.
     val spark = df.sparkSession
-    val pinnedN: Option[Int] = {
-      val perTask = spark.conf
-        .get("spark.graft.fanout.bytesPerTask", (64L * 1024 * 1024).toString).toLong
-      val target = spark.sparkContext.defaultParallelism
-      if (d.queryExecution.optimizedPlan.stats.sizeInBytes
-          < BigInt(perTask) * target) Some(target) else None
-    }
     val clustered =
-      if (filesPerMonth == 1)
-        pinnedN.map(n => d.repartition(n, col("part_month")))
-          .getOrElse(d.repartition(col("part_month")))
-      else {
-        val keys = Seq(col("part_month"),
-          pmod(hash(struct(df.columns.map(col): _*)), lit(filesPerMonth)))
-        pinnedN.map(n => d.repartition(n, keys: _*))
-          .getOrElse(d.repartition(keys: _*))
-      }
-    val sorted =
-      if (sortCols.isEmpty) clustered
-      else clustered.sortWithinPartitions(
-        (col("part_month") +: sortCols.map(col)): _*)
-    sorted.write.mode("overwrite").partitionBy("part_month").parquet(path)
+      if (Fanout.belowTaskBudget(spark, d.queryExecution.optimizedPlan.stats.sizeInBytes))
+        d.repartition(spark.sparkContext.defaultParallelism, keys: _*)
+      else d.repartition(keys: _*)
+    if (sortCols.isEmpty) clustered
+    else clustered.sortWithinPartitions((col("part_month") +: sortCols.map(col)): _*)
   }
 
   /** Date-bounded predicate for a month-partitioned table: the row-level

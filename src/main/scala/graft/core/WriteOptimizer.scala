@@ -21,16 +21,20 @@ object WriteOptimizer {
   /** Output partition count so each file lands near `targetBytes`, from
     * the logical plan's size estimate (`stats.sizeInBytes` — filters and
     * column pruning are already reflected, so a 2-column projection of a
-    * wide table sizes by the 2 columns, not the scan). Clamped to
-    * [1, maxParts]; maxParts guards against a runaway estimate fanning
-    * into more tasks than the cluster can usefully run.
+    * wide table sizes by the 2 columns, not the scan), bounded by the
+    * bytes the plan's leaves read: without column statistics a join's
+    * estimate is the PRODUCT of its sides' sizes, so a three-way join of
+    * MB-sized tables estimates terabytes. Clamped to [1, maxParts];
+    * maxParts guards against a runaway estimate fanning into more tasks
+    * than the cluster can usefully run.
     */
   def targetPartitions(
       df: DataFrame,
       targetBytes: Long = DefaultTargetBytes,
       maxParts: Int = 20000): Int = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes.min(plan.collectLeaves().map(_.stats.sizeInBytes).sum)
     val n = (bytes + targetBytes - 1) / targetBytes
     n.min(maxParts).max(1).toInt
   }

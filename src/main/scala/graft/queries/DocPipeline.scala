@@ -1412,7 +1412,9 @@ object DocPipeline {
       val nd = qp.select(col("tn"), col("td"),
           explode(array(col("doc_a"), col("doc_b"))).as("d"))
         .groupBy(col("tn"), col("td")).agg(countDistinct(col("d")).as("n_docs"))
-      broadcast(thr).join(np, Seq("tn", "td"), "left")
+      // no broadcast hint: thr is the preserved side of these left joins,
+      // which a broadcast join cannot build from (Spark drops such hints)
+      thr.join(np, Seq("tn", "td"), "left")
         .join(nd, Seq("tn", "td"), "left")
         .select(round(col("tn").cast("double") / col("td"), 2).as("threshold"),
           coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),

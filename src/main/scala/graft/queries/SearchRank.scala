@@ -185,7 +185,9 @@ object SearchRank {
       val delta = docs.filter(col("doc_id") % 7 === 0)
       val basePostings = IndexMaintain.postings(base).cache()
       val baseIndex = IndexMaintain.buildIndex(basePostings)
-      IndexMaintain.refresh(basePostings, baseIndex, delta)._2
+      // the refresh's caches must outlive this lazy result: the query
+      // runner's Sessions.release frees them with the other query caches
+      IndexMaintain.refresh(basePostings, baseIndex, delta, new graft.core.CacheScope)._2
     },
 
     // ---- IR5: two-stage retrieval (BM25 recall + positional rerank) ------

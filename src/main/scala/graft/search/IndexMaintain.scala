@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Incremental inverted-index maintenance — the index-side analog of
   * `gold/GoldIncremental`: when a delta batch of documents arrives (new
   * docs and whole-document updates), refresh the term index touching
@@ -63,72 +65,45 @@ object IndexMaintain {
   }
 
   /** Refresh the index given the OLD postings state and the delta batch.
-    * Returns (new postings state, new index). Only affected terms'
-    * index rows are recomputed. */
-  /** @param materializePostings hook applied to the spliced postings —
-    *   the maintainer passes its versioned-state write here, so the
-    *   splice chain (base anti-join + delta tokenize/aggregate) executes
-    *   exactly once and later consumers scan the written state instead of
-    *   re-running the chain (measured: three ~33-task re-executions per
-    *   batch in st_index_replay_parity). Default identity keeps the
-    *   pure-function shape for one-shot callers.
-    * @param materializeIndex same hook for the refreshed index. When both
-    *   hooks write, the two jobs run CONCURRENTLY (guide §2.6): the index
-    *   recompute no longer reads the materialized postings — its input is
-    *   derived independently as (base ▷ deltaIds) ⋉ affected ∪ deltaPost,
-    *   which equals newPostings ⋉ affected because the semi-join
-    *   distributes over the union and every deltaPost term is affected by
-    *   construction. Same per-batch scan count (one base-postings pass
-    *   each), no serial write → rescan → write chain. */
-  /** @param releaseCaches drop the per-batch caches (delta ids/postings,
-    *   affected terms) once both materialize hooks return. Pass true ONLY
-    *   when the hooks actually materialize (the maintainer's versioned
-    *   writes do): a long-lived maintainer otherwise leaks one storage
-    *   entry per table per batch. One-shot callers with identity hooks
-    *   must keep false — their returned frames are lazy and still read
-    *   the caches when the caller's action finally runs. */
+    * Returns (new postings state, new index), both lazy: only affected
+    * terms' index rows are recomputed. The per-batch caches (delta ids,
+    * delta postings) live in `scope`, which must stay open until the
+    * returned frames have been consumed.
+    *
+    * The two results are independent of each other, so a caller can
+    * write them CONCURRENTLY (guide §2.6): the index recompute does not
+    * read the new postings — its input is derived as
+    * (base ▷ deltaIds) ⋉ affected ∪ deltaPost, which equals
+    * newPostings ⋉ affected because the semi-join distributes over the
+    * union and every deltaPost term is affected by construction. One
+    * base-postings pass each, no serial write → rescan → write chain. */
   def refresh(basePostings: DataFrame, baseIndex: DataFrame,
-      deltaDocs: DataFrame, minDf: Int = 2,
-      materializePostings: DataFrame => DataFrame = identity,
-      materializeIndex: DataFrame => DataFrame = identity,
-      releaseCaches: Boolean = false): (DataFrame, DataFrame) = {
+      deltaDocs: DataFrame, scope: CacheScope): (DataFrame, DataFrame) = {
     // cached: the id set feeds THREE broadcasts (postings anti-join,
     // affected-term semi-join, splice anti-join) and exchange reuse does
     // not always unify separately-planned broadcast builds of the same
     // distinct — without the cache each one re-runs the delta groupBy
-    val deltaIds = deltaDocs.select(col("doc_id")).distinct().cache()
+    val deltaIds = scope.cached(deltaDocs.select(col("doc_id")).distinct())
     // tokenize the delta ONCE (cached — delta-bounded by definition):
     // both the postings splice and the affected-term set read it
-    val deltaPost = postings(deltaDocs).cache()
+    val deltaPost = scope.cached(postings(deltaDocs))
     def baseKept = basePostings
       .join(broadcast(deltaIds), Seq("doc_id"), "left_anti")
       .select(col("w"), col("doc_id"), col("tf"))
     // affected terms: everything the replaced docs used to mention plus
-    // everything the delta mentions now — both delta-bounded. Cached:
-    // it feeds TWO broadcast builds (recompute semi-join, untouched
-    // anti-join) planned as separate jobs, each of which would otherwise
-    // re-run the base-postings semi-join scan and the distinct shuffle.
+    // everything the delta mentions now — both delta-bounded. Not cached:
+    // it is built over the two caches above, and nested caches that the
+    // two concurrent writes build can deadlock on a failing batch
+    // (CacheScope). Both of its broadcasts sit in the one index write.
     val affected = basePostings
       .join(broadcast(deltaIds), Seq("doc_id"), "left_semi").select(col("w"))
       .unionByName(deltaPost.select(col("w")))
-      .distinct().cache()
+      .distinct()
     val recomputed = buildIndex(
       baseKept.join(broadcast(affected), Seq("w"), "left_semi")
-        .unionByName(deltaPost), minDf)
+        .unionByName(deltaPost))
     val untouched = baseIndex.join(
       broadcast(affected.select(col("w").as("term"))), Seq("term"), "left_anti")
-    try {
-      val Seq(newPostings, newIndex) = graft.core.Par.run(
-        () => materializePostings(baseKept.unionByName(deltaPost)),
-        () => materializeIndex(untouched.unionByName(recomputed)))
-      (newPostings, newIndex)
-    } finally if (releaseCaches) {
-      // both writes have materialized (or failed) — the per-batch caches
-      // must not outlive the batch, or a long-lived maintainer leaks one
-      // storage entry per table per applied batch
-      deltaIds.unpersist(blocking = false)
-      deltaPost.unpersist(blocking = false)
-      affected.unpersist(blocking = false)
-    }
+    (baseKept.unionByName(deltaPost), untouched.unionByName(recomputed))
   }
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * RUNNING current-window histogram maintained across micro-batches.
   * Per-batch work is one bucket-bounded groupBy over the batch plus a
   * <=k-row state merge: cost tracks the batch, never the stream history.
-  * State is a versioned parquet directory (same recovery story as
-  * GoldMaintainer — no pinned executor memory, lineage truncated at each
-  * batch write, drops onto Delta/Iceberg MERGE unchanged).
+  * State is one table in a [[VersionedState]] store (no pinned executor
+  * memory, lineage truncated at each batch write, drops onto
+  * Delta/Iceberg MERGE unchanged).
   *
   * PSI algebra matches dd53 exactly: fixed-width buckets, Laplace +1/k
   * smoothing, (cur-ref)*ln(cur/ref) per bucket — so the streaming monitor
@@ -24,8 +24,7 @@ final class DriftMonitor(
     bucketWidth: Double,
     nBuckets: Int) {
 
-  private var version = 0
-  private def curPath(v: Int) = s"$workDir/cur_v$v"
+  private val state = new VersionedState(spark, workDir, Seq("cur"))
   private val refPath = s"$workDir/ref"
 
   private def bucketize(df: DataFrame, valueCol: String): DataFrame =
@@ -35,37 +34,28 @@ final class DriftMonitor(
 
   /** Pin the reference histogram; start the current window empty. */
   def init(reference: DataFrame, valueCol: String): Unit = synchronized {
-    VersionedState.dropVersions(workDir, "cur")
     bucketize(reference, valueCol).write.mode("overwrite").parquet(refPath)
-    spark.emptyDataFrame
-      .select(lit(0).as("bucket"), lit(0L).as("n")).limit(0)
-      .write.mode("overwrite").parquet(curPath(0))
-    version = 0
+    state.reset("cur" -> (() => spark.emptyDataFrame
+      .select(lit(0).as("bucket"), lit(0L).as("n")).limit(0)))
   }
 
-  def currentHistogram: DataFrame = spark.read.parquet(curPath(version))
+  def currentHistogram: DataFrame = state("cur")
 
   /** Resume from the latest committed histogram version on disk. */
-  def recover(): Int = synchronized {
-    version = VersionedState.latestCommitted(workDir, Seq("cur"))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed drift state under $workDir"))
-    version
-  }
+  def recover(): Int = state.recover()
 
   /** One micro-batch: add the batch's bucket counts into the running
     * histogram. Outer-join merge on the <=k-row state — delta-bounded. */
   def applyBatch(batch: DataFrame, valueCol: String): Unit = synchronized {
-    if (batch.isEmpty) return
-    val merged = currentHistogram.withColumnRenamed("n", "n_prev")
-      .join(bucketize(batch, valueCol).withColumnRenamed("n", "n_new"),
-        Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        (coalesce(col("n_prev"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n"))
-    val next = version + 1
-    merged.write.mode("overwrite").parquet(curPath(next))
-    version = next
+    if (!batch.isEmpty) {
+      val prev = currentHistogram
+      state.commit("cur" -> (() => prev.withColumnRenamed("n", "n_prev")
+        .join(bucketize(batch, valueCol).withColumnRenamed("n", "n_new"),
+          Seq("bucket"), "full_outer")
+        .select(col("bucket"),
+          (coalesce(col("n_prev"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
+            .as("n"))))
+    }
   }
 
   /** Per-bucket PSI terms of the running window vs the pinned reference —
@@ -96,9 +86,5 @@ final class DriftMonitor(
 
   /** Attach to a streaming source of raw values. */
   def start(values: DataFrame, valueCol: String, queryName: String): StreamingQuery =
-    values.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => applyBatch(batch, valueCol) }
-      .start()
+    VersionedState.start(values, queryName)(applyBatch(_, valueCol))
 }

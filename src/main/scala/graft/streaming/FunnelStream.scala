@@ -22,15 +22,15 @@ import graft.gold.GoldIncremental
   * by construction. At cluster scale the log is bucketed by user_id so
   * the touched-user semi-join prunes to their buckets.
   *
-  * State lives in parquet (append-only log + versioned funnel table),
-  * same as [[GoldMaintainer]]: no pinned executor memory, drops onto a
+  * State lives in parquet: the append-only log plus the funnel table in
+  * a [[VersionedState]] store — no pinned executor memory, drops onto a
   * transactional table format unchanged.
   */
 final class FunnelMaintainer(spark: SparkSession, workDir: String) {
 
-  private var version = 0
   private def logPath = s"$workDir/events_log"
-  private def funnelPath(v: Int) = s"$workDir/funnel_v$v"
+  // only the funnel table is versioned: the event log is append-only
+  private val state = new VersionedState(spark, workDir, Seq("funnel"))
 
   /** The w15 cascade at per-user grain: t1 = first view, t2 = first
     * click strictly after t1, t3 = first purchase strictly after t2;
@@ -51,46 +51,36 @@ final class FunnelMaintainer(spark: SparkSession, workDir: String) {
   }
 
   def init(events0: DataFrame): Unit = synchronized {
-    VersionedState.dropVersions(workDir, "funnel")
     events0.write.mode("overwrite").parquet(logPath)
-    cascade(spark.read.parquet(logPath))
-      .write.mode("overwrite").parquet(funnelPath(0))
-    version = 0
+    state.reset("funnel" -> (() => cascade(eventLog)))
   }
 
+  /** The event log, re-listed on every call: a memoized frame would keep
+    * its file listing and miss the files later batches append. */
   def eventLog: DataFrame = spark.read.parquet(logPath)
-  def funnel: DataFrame = spark.read.parquet(funnelPath(version))
+  def funnel: DataFrame = state("funnel")
 
   /** Resume from the latest committed funnel version on disk (the event
     * log is append-only — parquet appends are file-atomic — so only the
     * funnel table is versioned). */
-  def recover(): Int = synchronized {
-    version = VersionedState.latestCommitted(workDir, Seq("funnel"))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed funnel state under $workDir"))
-    version
-  }
+  def recover(): Int = state.recover()
 
   /** One micro-batch: append the events, recompute the cascade for the
     * touched users only, splice their funnel rows. */
   def applyBatch(batch: DataFrame): Unit = synchronized {
-    if (batch.isEmpty) return
-    val cols = eventLog.columns
-    batch.select(cols.map(col).toIndexedSeq: _*)
-      .write.mode("append").parquet(logPath)
-    val keys = batch.select(col("user_id")).distinct()
-    val log = spark.read.parquet(logPath)
-    val next = version + 1
-    GoldIncremental.refresh(funnel, keys, "user_id") { ks =>
-      cascade(log.join(ks, Seq("user_id"), "left_semi"))
-    }.write.mode("overwrite").parquet(funnelPath(next))
-    version = next
+    if (!batch.isEmpty) {
+      batch.select(eventLog.columns.map(col).toIndexedSeq: _*)
+        .write.mode("append").parquet(logPath)
+      val keys = batch.select(col("user_id")).distinct()
+      val log = eventLog
+      val prev = funnel
+      state.commit("funnel" -> (() =>
+        GoldIncremental.refresh(prev, keys, "user_id") { ks =>
+          cascade(log.join(ks, Seq("user_id"), "left_semi"))
+        }))
+    }
   }
 
   def start(events: DataFrame, queryName: String): StreamingQuery =
-    events.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => applyBatch(batch) }
-      .start()
+    VersionedState.start(events, queryName)(applyBatch)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.CacheScope
 import graft.gold.GoldIncremental
 
 /** Streaming incremental MV maintenance (SURVEY.md §3.2 + §4): the
@@ -28,13 +29,7 @@ final class GoldMaintainer(
     buildGold: DataFrame => DataFrame,
     trackMetrics: Boolean = false) {
 
-  private var version = 0
-  // Memoized read-back frames, set at write time with the write schema
-  // pinned (VersionedState.writeRead): re-opening state with
-  // spark.read.parquet costs a footer-inference job per call, and the
-  // replay gates re-open fact/gold dozens of times per run.
-  private var factDf: DataFrame = _
-  private var goldDf: DataFrame = _
+  private val state = new VersionedState(spark, workDir, Seq("fact", "gold"))
 
   /** Per-batch throughput/state metrics (SURVEY §2.11 A13 ≅
     * StreamingQueryListener progress): rows processed, keys touched, and
@@ -49,8 +44,8 @@ final class GoldMaintainer(
   private def record(batchId: Int, rowsIn: Long, keysTouched: Long): Unit =
     if (trackMetrics)
       metricsBuf += ((batchId, rowsIn, keysTouched,
-        VersionedState.rowCount(spark, factPath(version)),
-        VersionedState.rowCount(spark, goldPath(version))))
+        VersionedState.rowCount(spark, state.path("fact")),
+        VersionedState.rowCount(spark, state.path("gold"))))
 
   /** (batch_id, rows_in, keys_touched, state_rows, gold_rows) per applied
     * batch, init included as batch 0. */
@@ -61,70 +56,47 @@ final class GoldMaintainer(
       .toDF("batch_id", "rows_in", "keys_touched", "state_rows", "gold_rows")
   }
 
-  private def factPath(v: Int) = s"$workDir/fact_v$v"
-  private def goldPath(v: Int) = s"$workDir/gold_v$v"
-
   /** Seed v0 from the initial fact state; builds the initial gold. Both
     * writes run CONCURRENTLY (guide §2.6): the gold build reads the same
     * lazy seed frame the fact write persists — one source scan each,
     * same total I/O as write-then-rescan, but the two job chains overlap
     * instead of serializing on a mostly-idle session. */
   def init(fact0: DataFrame): Unit = synchronized {
-    VersionedState.dropVersions(workDir, "fact", "gold")
-    val Seq(f, g) = graft.core.Par.run(
-      () => VersionedState.writeRead(fact0, factPath(0)),
-      () => VersionedState.writeRead(buildGold(fact0), goldPath(0)))
-    factDf = f
-    goldDf = g
-    version = 0
+    state.reset("fact" -> (() => fact0), "gold" -> (() => buildGold(fact0)))
     metricsBuf.clear()
     if (trackMetrics) {
       // batch 0 = init: rows_in is the seeded fact size, keys_touched its
       // distinct parents (== gold rows); both are footer metadata.
-      val n = VersionedState.rowCount(spark, factPath(0))
-      record(0, n, VersionedState.rowCount(spark, goldPath(0)))
+      val n = VersionedState.rowCount(spark, state.path("fact"))
+      record(0, n, VersionedState.rowCount(spark, state.path("gold")))
     }
   }
 
-  def fact: DataFrame = synchronized {
-    if (factDf == null) factDf = spark.read.parquet(factPath(version))
-    factDf
-  }
-  def gold: DataFrame = synchronized {
-    if (goldDf == null) goldDf = spark.read.parquet(goldPath(version))
-    goldDf
-  }
+  def fact: DataFrame = state("fact")
+  def gold: DataFrame = state("gold")
 
   /** Resume from the latest fully-committed (fact AND gold) version on
     * disk; a torn version from a crash between the two writes is skipped. */
-  def recover(): Int = synchronized {
-    version = VersionedState.latestCommitted(workDir, Seq("fact", "gold"))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed gold state under $workDir"))
-    factDf = null; goldDf = null // re-open lazily from the recovered version
-    version
-  }
+  def recover(): Int = state.recover()
 
   /** One micro-batch: child-replace the touched parents in the fact
     * state, then splice ONLY those parents' recomputed gold rows. */
-  def applyBatch(batch0: DataFrame): Unit = synchronized {
-    // persist the micro-batch ONCE: the splice reads it several times
+  def applyBatch(batch0: DataFrame): Unit = synchronized(CacheScope { scope =>
+    // cache the micro-batch ONCE: the splice reads it several times
     // (key set, fact union, metrics), and an un-cached foreachBatch frame
     // re-scans its source on every action — measured 5× the input rows
     // in the listener's numInputRows before this cache
-    val batch = batch0.persist()
-    try {
-      // ONE job surfaces both counts the batch needs (row count for the
-      // empty-batch gate, distinct-parent count for the refresh's
-      // adaptive join budget + metrics) instead of two.
-      val hdr = batch.agg(count(lit(1)), count_distinct(col(parentKey))).head()
-      val rowsIn = hdr.getLong(0)
-      if (rowsIn == 0) return
+    val batch = scope.cached(batch0)
+    // ONE job surfaces both counts the batch needs (row count for the
+    // empty-batch gate, distinct-parent count for the refresh's
+    // adaptive join budget + metrics) instead of two.
+    val hdr = batch.agg(count(lit(1)), count_distinct(col(parentKey))).head()
+    val rowsIn = hdr.getLong(0)
+    if (rowsIn > 0) {
       val nKeys = hdr.getLong(1)
       val prevFact = fact
       val prevGold = gold
       val keys = batch.select(col(parentKey)).distinct()
-      val next = version + 1
       val batchCols = batch.select(prevFact.columns.map(col).toIndexedSeq: _*)
       // The gold recompute's input is provably the batch itself, no fact
       // re-read needed: newFact ⋉ keys = ((prevFact ▷ keys) ∪ batch) ⋉ keys
@@ -133,28 +105,19 @@ final class GoldMaintainer(
       // fact-write → gold-write dependency, so the two writes run
       // CONCURRENTLY (guide §2.6) — the replay gates' profiles were long
       // serial chains of 1-4-task jobs on an idle 32-core session.
-      val Seq(newFact, newGold) = graft.core.Par.run(
-        () => VersionedState.writeRead(
-          prevFact.join(keys, Seq(parentKey), "left_anti")
-            .unionByName(batchCols),
-          factPath(next)),
-        () => VersionedState.writeRead(
+      val next = state.commit(
+        "fact" -> (() => prevFact.join(keys, Seq(parentKey), "left_anti")
+          .unionByName(batchCols)),
+        "gold" -> (() =>
           GoldIncremental.refresh(prevGold, keys, parentKey, Some(nKeys)) { ks =>
             buildGold(batchCols.join(ks, Seq(parentKey), "left_semi"))
-          }, goldPath(next)))
-      factDf = newFact
-      goldDf = newGold
-      version = next
+          }))
       if (trackMetrics) record(next, rowsIn, nKeys)
-    } finally batch.unpersist(blocking = false)
-  }
+    }
+  })
 
   /** Attach to a streaming delta source; each micro-batch maintains the
     * gold table incrementally. */
   def start(deltas: DataFrame, queryName: String): StreamingQuery =
-    deltas.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => applyBatch(batch) }
-      .start()
+    VersionedState.start(deltas, queryName)(applyBatch)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.CacheScope
 import graft.search.IndexMaintain
 
 /** Streaming inverted-index maintenance: document micro-batches (new
@@ -12,79 +13,48 @@ import graft.search.IndexMaintain
   * its own vocabulary, so the per-batch cost tracks the batch, not the
   * corpus.
   *
-  * State lives in parquet (versioned postings + index tables), same as
-  * [[FunnelMaintainer]]/[[GoldMaintainer]]: no pinned executor memory,
-  * restart-safe, drops onto a transactional table format unchanged.
+  * State lives in a [[VersionedState]] store (postings + index tables):
+  * no pinned executor memory, restart-safe, drops onto a transactional
+  * table format unchanged.
   */
 final class IndexMaintainer(spark: SparkSession, workDir: String) {
 
-  private var version = 0
-  // Memoized schema-pinned read-back frames (VersionedState.writeRead):
-  // a bare spark.read.parquet pays a footer-inference job per call.
-  private var postingsDf: DataFrame = _
-  private var indexDf: DataFrame = _
-  private def postingsPath(v: Int) = s"$workDir/postings_v$v"
-  private def indexPath(v: Int) = s"$workDir/index_v$v"
+  // compact: the states are slim and re-scanned several times per batch
+  // (VersionedState.writeRead)
+  private val state =
+    new VersionedState(spark, workDir, Seq("postings", "index"), compact = true)
 
-  def init(docs0: DataFrame): Unit = synchronized {
-    VersionedState.dropVersions(workDir, "postings", "index")
+  def init(docs0: DataFrame): Unit = synchronized(CacheScope { scope =>
     // one cached tokenize feeds both concurrent writes (guide §2.6)
-    val p0 = IndexMaintain.postings(docs0).cache()
-    try {
-      val Seq(p, i) = graft.core.Par.run(
-        () => VersionedState.writeRead(p0, postingsPath(0), compact = true),
-        () => VersionedState.writeRead(
-          IndexMaintain.buildIndex(p0), indexPath(0), compact = true))
-      postingsDf = p
-      indexDf = i
-    } finally { p0.unpersist(blocking = false); () }
-    version = 0
-  }
+    val p0 = scope.cached(IndexMaintain.postings(docs0))
+    state.reset(
+      "postings" -> (() => p0),
+      "index" -> (() => IndexMaintain.buildIndex(p0)))
+  })
 
-  def postingsState: DataFrame = synchronized {
-    if (postingsDf == null) postingsDf = spark.read.parquet(postingsPath(version))
-    postingsDf
-  }
-  def index: DataFrame = synchronized {
-    if (indexDf == null) indexDf = spark.read.parquet(indexPath(version))
-    indexDf
-  }
+  def postingsState: DataFrame = state("postings")
+  def index: DataFrame = state("index")
 
   /** Resume from the latest fully-committed (postings AND index) version
     * on disk — a restarted maintainer continues where the crashed one
     * stopped; a torn version (postings written, index not) is skipped. */
-  def recover(): Int = synchronized {
-    version = VersionedState.latestCommitted(workDir, Seq("postings", "index"))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed index state under $workDir"))
-    postingsDf = null; indexDf = null // re-open from the recovered version
-    version
-  }
+  def recover(): Int = state.recover()
 
   /** One micro-batch of documents(doc_id, text): splice postings, refresh
     * only the touched terms' index rows. */
   def applyBatch(batch: DataFrame): Unit = synchronized {
-    if (batch.isEmpty) return
-    val delta = batch.select(col("doc_id"), col("text"))
-    val next = version + 1
-    // BOTH state writes happen inside refresh (materialize hooks) and run
-    // concurrently (guide §2.6): the splice chain executes once for the
-    // postings write while the affected-term index recompute — derived
-    // independently of the written postings — feeds the index write in a
-    // parallel job chain. Later consumers read the written tables.
-    val (p1, i1) = IndexMaintain.refresh(postingsState, index, delta,
-      materializePostings = p => VersionedState.writeRead(p, postingsPath(next), compact = true),
-      materializeIndex = i => VersionedState.writeRead(i, indexPath(next), compact = true),
-      releaseCaches = true)
-    postingsDf = p1
-    indexDf = i1
-    version = next
+    if (!batch.isEmpty) CacheScope { scope =>
+      // the two refreshed tables are independent, so their writes run
+      // concurrently (guide §2.6): the splice chain executes once for
+      // the postings write while the affected-term index recompute feeds
+      // the index write in a parallel job chain. Later consumers read
+      // the written tables.
+      val (p1, i1) = IndexMaintain.refresh(postingsState, index,
+        batch.select(col("doc_id"), col("text")), scope)
+      state.commit("postings" -> (() => p1), "index" -> (() => i1))
+    }
   }
 
   def start(docs: DataFrame, queryName: String): StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => applyBatch(batch) }
-      .start()
+    VersionedState.start(docs, queryName)(applyBatch)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.CacheScope
 import graft.queries.DocPipeline
 import graft.resolve.LshBands
 
@@ -22,10 +23,9 @@ import graft.resolve.LshBands
   * reject-on-dup semantics would be an order-dependent fixpoint no
   * one-shot query could express.
   *
-  * State lives in versioned parquet (bands + shingles + sizes tables),
-  * same as [[IndexMaintainer]]/[[GoldMaintainer]]: no pinned executor
-  * memory, restart-safe via [[VersionedState]], drops onto a
-  * transactional table format unchanged. Per-batch cost: the batch's
+  * State lives in a [[VersionedState]] store (bands, shingles, sizes
+  * and decisions tables): no pinned executor memory, restart-safe,
+  * drops onto a transactional table format unchanged. Per-batch cost: the batch's
   * shingle/banding pass + a band-key equi-join into the standing bands
   * (stored band-bucketed at scale, so the probe co-locates) +
   * verification joins pruned to band-collision candidates — the
@@ -34,22 +34,14 @@ import graft.resolve.LshBands
 final class LshAdmitMaintainer(spark: SparkSession, workDir: String,
                                threshold: Double = 0.4) {
 
-  private val Prefixes = Seq("bands", "shingles", "sizes", "decisions")
-  private var version = 0
-  // Memoized schema-pinned read-back frames per state table
-  // (VersionedState.writeRead): a bare spark.read.parquet pays a
-  // footer-inference job per call, and every batch re-opens all four.
-  private val stateDf = scala.collection.mutable.HashMap[String, DataFrame]()
-  private def path(prefix: String, v: Int) = s"$workDir/${prefix}_v$v"
-  private def state(prefix: String): DataFrame = synchronized {
-    stateDf.getOrElseUpdate(prefix, spark.read.parquet(path(prefix, version)))
-  }
+  private val state = new VersionedState(spark, workDir,
+    Seq("bands", "shingles", "sizes", "decisions"))
 
-  /** Shingle array (cached: three consumers), bands, exploded shingles,
-    * sizes — caller unpersists the first element after its writes. */
-  private def parts(docs: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val arr = DocPipeline.shingleArr(docs).cache()
-    (arr, LshBands.bandsOf(arr),
+  /** Bands, exploded shingles and sizes of `docs`, all three read from
+    * one shingle array cached in `scope`. */
+  private def parts(docs: DataFrame, scope: CacheScope): (DataFrame, DataFrame, DataFrame) = {
+    val arr = scope.cached(DocPipeline.shingleArr(docs.select(col("doc_id"), col("text"))))
+    (LshBands.bandsOf(arr),
       arr.select(col("doc_id"), explode(col("shArr")).as("sh")),
       arr.select(col("doc_id"), size(col("shArr")).cast("long").as("n")))
   }
@@ -59,23 +51,13 @@ final class LshAdmitMaintainer(spark: SparkSession, workDir: String,
                         CAST(NULL AS BIGINT) AS match_id,
                         CAST(NULL AS DOUBLE) AS jacc""").limit(0)
 
-  def init(docs0: DataFrame): Unit = synchronized {
-    VersionedState.dropVersions(workDir, Prefixes: _*)
-    val (arr, b0, sh0, n0) = parts(docs0.select(col("doc_id"), col("text")))
+  def init(docs0: DataFrame): Unit = synchronized(CacheScope { scope =>
+    val (b0, sh0, n0) = parts(docs0, scope)
     // the four state writes are independent (all derive from the cached
-    // shingle array) — submit them concurrently (guide §2.6)
-    val Seq(bDf, shDf, nDf, dDf) = graft.core.Par.run(
-      () => VersionedState.writeRead(b0, path("bands", 0)),
-      () => VersionedState.writeRead(sh0, path("shingles", 0)),
-      () => VersionedState.writeRead(n0, path("sizes", 0)),
-      () => VersionedState.writeRead(emptyDecisions, path("decisions", 0)))
-    stateDf("bands") = bDf
-    stateDf("shingles") = shDf
-    stateDf("sizes") = nDf
-    stateDf("decisions") = dDf
-    arr.unpersist(blocking = false)
-    version = 0
-  }
+    // shingle array) — submitted concurrently (guide §2.6)
+    state.reset("bands" -> (() => b0), "shingles" -> (() => sh0),
+      "sizes" -> (() => n0), "decisions" -> (() => emptyDecisions))
+  })
 
   def bands: DataFrame = state("bands")
   def shinglesState: DataFrame = state("shingles")
@@ -87,71 +69,48 @@ final class LshAdmitMaintainer(spark: SparkSession, workDir: String,
 
   /** Resume from the latest version where ALL FOUR state tables
     * committed; a torn version (crash between writes) is skipped. */
-  def recover(): Int = synchronized {
-    version = VersionedState.latestCommitted(workDir, Prefixes)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed LSH-admission state under $workDir"))
-    stateDf.clear() // re-open lazily from the recovered version
-    version
-  }
+  def recover(): Int = state.recover()
 
   /** One micro-batch of documents(doc_id, text): label every doc against
     * the standing index, then admit the whole batch. Intra-batch
     * near-dups are NOT matched against each other (strictly-earlier
     * semantics — within a batch there is no order). */
   def applyBatch(batch: DataFrame): Unit = synchronized {
-    if (batch.isEmpty) return
-    val (dArr, dBands, dSh, dN) = parts(batch.select(col("doc_id"), col("text")))
-    val sBands = bands
-    val cand = dBands.as("d").join(sBands.as("s"),
-        col("d.band_idx") === col("s.band_idx") && col("d.bkey") === col("s.bkey"))
-      .select(col("d.doc_id").as("d_id"), col("s.doc_id").as("s_id"))
-      .distinct()
-    val verified = LshBands.verify(cand, dSh, shinglesState, dN, sizes, threshold)
-    val best = verified.withColumn("rk",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("d_id").orderBy(col("jacc").desc, col("s_id").asc)))
-      .filter(col("rk") === 1)
-    val batchDecisions = batch.select(col("doc_id"))
-      .join(best.select(col("d_id").as("doc_id"), col("s_id").as("match_id"),
-        col("jacc")), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("match_id").isNull, "new").otherwise("near_dup").as("status"),
-        col("match_id"), col("jacc"))
-    val next = version + 1
-    // every next-version table derives from version `version` reads plus
-    // the batch — versioned paths keep the reads and writes disjoint, and
-    // the four writes are mutually independent, so they run CONCURRENTLY
-    // (guide §2.6): the expensive decisions chain (candidates + verify +
-    // window) overlaps the three trivial union writes instead of the
-    // session idling through each small job's tail in turn. State frames
-    // are captured HERE, not inside the thunks: the accessors synchronize
-    // on this maintainer, whose monitor the batch thread already holds —
-    // a pool thread calling them would deadlock.
-    val sDecisions = decisions
-    val sShingles = shinglesState
-    val sSizes = sizes
-    val Seq(dDf, bDf, shDf, nDf) = graft.core.Par.run(
-      () => VersionedState.writeRead(
-        sDecisions.unionByName(batchDecisions), path("decisions", next)),
-      () => VersionedState.writeRead(
-        sBands.unionByName(dBands), path("bands", next)),
-      () => VersionedState.writeRead(
-        sShingles.unionByName(dSh), path("shingles", next)),
-      () => VersionedState.writeRead(
-        sSizes.unionByName(dN), path("sizes", next)))
-    val newState = Map(
-      "decisions" -> dDf, "bands" -> bDf, "shingles" -> shDf, "sizes" -> nDf)
-    stateDf.clear()
-    stateDf ++= newState
-    dArr.unpersist(blocking = false)
-    version = next
+    if (!batch.isEmpty) CacheScope { scope =>
+      val (dBands, dSh, dN) = parts(batch, scope)
+      val sBands = bands
+      val cand = dBands.as("d").join(sBands.as("s"),
+          col("d.band_idx") === col("s.band_idx") && col("d.bkey") === col("s.bkey"))
+        .select(col("d.doc_id").as("d_id"), col("s.doc_id").as("s_id"))
+        .distinct()
+      val verified = LshBands.verify(cand, dSh, shinglesState, dN, sizes, threshold)
+      val best = verified.withColumn("rk",
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy("d_id").orderBy(col("jacc").desc, col("s_id").asc)))
+        .filter(col("rk") === 1)
+      val batchDecisions = batch.select(col("doc_id"))
+        .join(best.select(col("d_id").as("doc_id"), col("s_id").as("match_id"),
+          col("jacc")), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("match_id").isNull, "new").otherwise("near_dup").as("status"),
+          col("match_id"), col("jacc"))
+      // every next-version table derives from current-version reads plus
+      // the batch — versioned paths keep the reads and writes disjoint, and
+      // the four writes are mutually independent, so they run CONCURRENTLY
+      // (guide §2.6): the expensive decisions chain (candidates + verify +
+      // window) overlaps the three trivial union writes instead of the
+      // session idling through each small job's tail in turn.
+      val sDecisions = decisions
+      val sShingles = shinglesState
+      val sSizes = sizes
+      state.commit(
+        "decisions" -> (() => sDecisions.unionByName(batchDecisions)),
+        "bands" -> (() => sBands.unionByName(dBands)),
+        "shingles" -> (() => sShingles.unionByName(dSh)),
+        "sizes" -> (() => sSizes.unionByName(dN)))
+    }
   }
 
   def start(docs: DataFrame, queryName: String): StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => applyBatch(batch) }
-      .start()
+    VersionedState.start(docs, queryName)(applyBatch)
 }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ModelStreamSpec pins.
   *
   * Per-batch cost: one narrow pass over the batch + a 9-column 1-row
-  * merge — tracks the batch, never the stream history. State recovery is
-  * the same versioned-parquet story as DriftMonitor/GoldMaintainer.
+  * merge — tracks the batch, never the stream history. State and its
+  * recovery live in a [[VersionedState]] store.
   * (Step 2 needs per-row work under the CURRENT beta, so a full second
   * Newton step remains a batch job over the accumulated corpus — the
   * standard warm-start split: the stream keeps the step-1 estimator
@@ -28,8 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 final class OnlineLogit(spark: SparkSession, workDir: String) {
 
-  private var version = 0
-  private def path(v: Int) = s"$workDir/sums_v$v"
+  private val state = new VersionedState(spark, workDir, Seq("sums"))
   private val cols = Seq("s00", "s01", "s02", "s11", "s12", "s22", "g0", "g1", "g2")
 
   /** Per-row decimal-frozen normal-equation terms — identical recipe to
@@ -43,24 +42,15 @@ final class OnlineLogit(spark: SparkSession, workDir: String) {
       frozen("(y-0.5)", "g0"), frozen("x1*(y-0.5)", "g1"), frozen("x2*(y-0.5)", "g2"))
   }
 
+  /** Start a fresh model at zero sums. */
   def init(): Unit = synchronized {
-    // a fresh model must not resurrect state: recover() takes the MAX
-    // committed version, so any sums_v{N>0} left by a prior run in the
-    // same workDir would silently fold old data into the new coefficients
-    VersionedState.dropVersions(workDir, "sums")
-    spark.range(1)
-      .select(cols.map(c => lit(java.math.BigDecimal.ZERO).cast("decimal(28,9)").as(c)): _*)
-      .write.mode("overwrite").parquet(path(0))
-    version = 0
+    state.reset("sums" -> (() => spark.range(1)
+      .select(cols.map(c => lit(java.math.BigDecimal.ZERO).cast("decimal(28,9)").as(c)): _*)))
   }
 
-  def currentSums: DataFrame = spark.read.parquet(path(version))
+  def currentSums: DataFrame = state("sums")
 
-  def recover(): Int = synchronized {
-    version = VersionedState.latestCommitted(workDir, Seq("sums"))
-      .getOrElse(throw new IllegalStateException(s"no committed model state under $workDir"))
-    version
-  }
+  def recover(): Int = state.recover()
 
   /** One micro-batch: add the batch's nine sums into the state. Both
     * operands cast to (28,9) BEFORE the add: decimal(38,9)+decimal(38,9)
@@ -69,17 +59,15 @@ final class OnlineLogit(spark: SparkSession, workDir: String) {
     * sums from the batch pass (the same 38-digit-ceiling trap dd67 and
     * dd73 document); (28,9)+(28,9)=(29,9) stays exact. */
   def applyBatch(feats: DataFrame): Unit = synchronized {
-    if (feats.isEmpty) return
-    val b = batchSums(feats)
-    val merged = currentSums.crossJoin(
-        b.select(cols.map(c => col(c).as(s"b_$c")): _*))
-      .select(cols.map(c =>
-        (coalesce(col(c), lit(0)).cast("decimal(28,9)") +
-          coalesce(col(s"b_$c"), lit(0)).cast("decimal(28,9)"))
-          .cast("decimal(28,9)").as(c)): _*)
-    val next = version + 1
-    merged.write.mode("overwrite").parquet(path(next))
-    version = next
+    if (!feats.isEmpty) {
+      val prev = currentSums
+      state.commit("sums" -> (() => prev.crossJoin(
+          batchSums(feats).select(cols.map(c => col(c).as(s"b_$c")): _*))
+        .select(cols.map(c =>
+          (coalesce(col(c), lit(0)).cast("decimal(28,9)") +
+            coalesce(col(s"b_$c"), lit(0)).cast("decimal(28,9)"))
+            .cast("decimal(28,9)").as(c)): _*)))
+    }
   }
 
   /** Current step-1 coefficients: 4 * S^-1 g via the shared closed-form
@@ -94,9 +82,5 @@ final class OnlineLogit(spark: SparkSession, workDir: String) {
 
   /** Attach to a streaming source of (x1, x2, y) feature rows. */
   def start(feats: DataFrame, queryName: String): StreamingQuery =
-    feats.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => applyBatch(batch) }
-      .start()
+    VersionedState.start(feats, queryName)(applyBatch)
 }

@@ -21,6 +21,19 @@ class LayoutSpec extends SparkTestBase {
     assert(spark.read.parquet(out).filter(col("part_month") === "1999-01").count() == 0)
   }
 
+  test("a small month-partitioned write pins its clustering exchange; past the size gate AQE sizes it") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    def exchangeParts(): Seq[Option[Int]] =
+      Layout.clusteredByMonth(Tables(spark, sf0001, "events"), "ts", 1, Seq("user_id"))
+        .queryExecution.optimizedPlan.collect {
+          case r: RepartitionByExpression => r.optNumPartitions
+        }
+    assert(exchangeParts() == Seq(Some(spark.sparkContext.defaultParallelism)))
+    spark.conf.set("spark.graft.fanout.bytesPerTask", "0")
+    try assert(exchangeParts() == Seq(None))
+    finally spark.conf.unset("spark.graft.fanout.bytesPerTask")
+  }
+
   test("bucketed tables join without an exchange on the bucket key") {
     Layout.writeBucketed(Tables(spark, sf0001, "orders"), "o_orderkey", 4, "b_orders")
     Layout.writeBucketed(

@@ -46,6 +46,21 @@ class WriteOptimizerSpec extends SparkTestBase {
     assert(WriteOptimizer.targetPartitions(df, targetBytes = 1, maxParts = 7) == 7)
   }
 
+  test("a join's size estimate is bounded by its input bytes, not capped at maxParts") {
+    val df = Tables(spark, sf0001, "lineitem")
+      .join(Tables(spark, sf0001, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables(spark, sf0001, "customer"), col("o_custkey") === col("c_custkey"))
+    // no column statistics: the estimate of an inner join is the product
+    // of its sides' sizes, terabytes for these three small tables
+    val estimate = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(estimate > BigInt(20000) * WriteOptimizer.DefaultTargetBytes, s"estimate=$estimate")
+    val input = Seq("lineitem", "orders", "customer")
+      .map(t => new File(s"$sf0001/$t.parquet").length).sum
+    val target = 16 * 1024L
+    assert(WriteOptimizer.targetPartitions(df, targetBytes = target) ==
+      (input + target - 1) / target, s"input=$input")
+  }
+
   test("sortCols yields files whose rows are sorted (row-group pruning ready)") {
     val out = Files.createTempDirectory("wo-sort").toString
     WriteOptimizer.sizedWrite(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.CacheScope
 
 /** Incremental index maintenance ≡ from-scratch rebuild, on a delta that
   * exercises every interesting transition: brand-new docs, replaced
@@ -32,7 +33,8 @@ class IndexMaintainSpec extends SparkTestBase {
       (900002L, "fresh fresh epsilon")
     ).toDF("doc_id", "text").cache()
 
-    val (newPostings, newIndex) = IndexMaintain.refresh(basePostings, baseIndex, delta)
+    val scope = new CacheScope
+    val (newPostings, newIndex) = IndexMaintain.refresh(basePostings, baseIndex, delta, scope)
 
     // ground truth: rebuild everything from the post-delta corpus
     val ids = delta.select("doc_id")
@@ -55,6 +57,7 @@ class IndexMaintainSpec extends SparkTestBase {
       broadcast(affectedTerms.select(col("w").as("term"))), Seq("term"), "left_anti")
     assert(untouchedOld.exceptAll(newIndex).isEmpty,
       "an untouched term's index row was modified")
+    scope.release()
     Seq(base, basePostings, baseIndex, delta).foreach(_.unpersist())
   }
 
@@ -81,11 +84,13 @@ class IndexMaintainSpec extends SparkTestBase {
       val deltaDf = delta.toDF("doc_id", "text")
       val p0 = IndexMaintain.postings(baseDf)
       val i0 = IndexMaintain.buildIndex(p0)
-      val (p1, i1) = IndexMaintain.refresh(p0, i0, deltaDf)
-      val deltaIds = delta.map(_._1).toSet
-      val after = corpus.filterNot(d => deltaIds(d._1)).++(delta).toDF("doc_id", "text")
-      sameRows(p1, IndexMaintain.postings(after)) &&
-        sameRows(i1, IndexMaintain.buildIndex(IndexMaintain.postings(after)))
+      CacheScope { scope =>
+        val (p1, i1) = IndexMaintain.refresh(p0, i0, deltaDf, scope)
+        val deltaIds = delta.map(_._1).toSet
+        val after = corpus.filterNot(d => deltaIds(d._1)).++(delta).toDF("doc_id", "text")
+        sameRows(p1, IndexMaintain.postings(after)) &&
+          sameRows(i1, IndexMaintain.buildIndex(IndexMaintain.postings(after)))
+      }
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
     assert(res.passed, res.status.toString)
@@ -103,12 +108,14 @@ class IndexMaintainSpec extends SparkTestBase {
     assert(i0.filter(col("term") === "shared").count() == 1) // df=2 indexed
     // replace doc 2: 'shared' drops to df=1 → must LEAVE the index
     val delta = Seq((2L, "replacement text")).toDF("doc_id", "text")
-    val (p1, i1) = IndexMaintain.refresh(p0, i0, delta)
+    val scope = new CacheScope
+    val (p1, i1) = IndexMaintain.refresh(p0, i0, delta, scope)
     assert(i1.filter(col("term") === "shared").count() == 0)
     // and equals the rebuild
     val after = tiny.filter(col("doc_id") =!= 2L).unionByName(delta)
     assert(sameRows(i1, IndexMaintain.buildIndex(IndexMaintain.postings(after))))
     assert(sameRows(p1, IndexMaintain.postings(after)))
+    scope.release()
     tiny.unpersist()
   }
 }
