@@ -4,7 +4,9 @@
 Usage: python3 scripts/bench_diff.py <old.json> <new.json> [threshold]
 
 Prints queries whose timing changed by more than `threshold` (default
-0.30 = 30%) in either direction, plus new/vanished queries and errors.
+0.30 = 30%) and by more than 0.1 s in either direction, plus new/vanished
+queries and errors. A threshold of 0 prints every query, e.g. the per-query
+ratios of a Bench run on a scaled dataset against one on its base.
 Handles the driver's truncated files (parsed:null) by skipping gracefully.
 """
 import sys, json
@@ -39,7 +41,7 @@ def main():
             rows.append((name, a, b, "NEW"))
         elif b is None:
             rows.append((name, a, b, "VANISHED"))
-        elif a > 0 and abs(b - a) / a > thr and abs(b - a) > 0.1:
+        elif a > 0 and (thr == 0 or (abs(b - a) / a > thr and abs(b - a) > 0.1)):
             rows.append((name, a, b, f"{(b - a) / a:+.0%}"))
     for name, a, b, tag in rows:
         fa = f"{a:.2f}" if a is not None else "-"

@@ -75,6 +75,7 @@ object Explain {
           _.metadata.get("PushedFilters").exists(v => v != "[]"))
         println(s"| ${q.name} | ${shuffles.length - single} | $single | " +
           s"$bcasts | $scans | $pushed |")
+        Sessions.release(spark)
       }
     } else {
       picked.foreach { q =>

@@ -20,7 +20,7 @@ object Layout {
     * files — at 1000 executors and 84 months, ~84k files per write), and
     * the listing/footer overhead of the tiny files costs more than the
     * pruning saves (measured: the unclustered layout LOST 2.5× to the
-    * flat scan at 10×; see LayoutBench). `filesPerMonth` spreads a month
+    * flat scan at 10×; PLANS.md round 10). `filesPerMonth` spreads a month
     * across that many writers when one 128 MiB-ish file per month is not
     * enough — size it ≈ month_bytes / 128 MiB at the target scale. */
   /** @param sortCols sort rows on these columns WITHIN each month's
@@ -61,20 +61,6 @@ object Layout {
     if (sortCols.isEmpty) clustered
     else clustered.sortWithinPartitions((col("part_month") +: sortCols.map(col)): _*)
   }
-
-  /** Date-bounded predicate for a month-partitioned table: the row-level
-    * `tsCol` bounds PLUS the covering `part_month` partition filter —
-    * partition pruning needs the partition column in the predicate (Spark
-    * does not derive `part_month` bounds from `tsCol` bounds; without
-    * this the scan lists and reads every month and the layout buys
-    * nothing — measured in LayoutBench). Dates as 'yyyy-MM-dd…' strings;
-    * end is exclusive, its month inclusive (a range ending mid-month
-    * still needs that month's partition). */
-  def monthBounded(tsCol: String, startInclusive: String,
-      endExclusive: String): org.apache.spark.sql.Column =
-    col("part_month") >= startInclusive.substring(0, 7) &&
-      col("part_month") <= endExclusive.substring(0, 7) &&
-      col(tsCol) >= startInclusive && col(tsCol) < endExclusive
 
   /** Persist both sides bucketed on the join key: subsequent equi-joins
     * between them are exchange-free (no shuffle in the plan). */

@@ -20,11 +20,4 @@ object Parity {
     */
   def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast("double")
-
-  /** Exact decimal average rendered as double; pair with
-    * CAST(AVG(...) AS ...) carefully — instead we do sum/count in both
-    * engines so the division is a single IEEE op on identical operands.
-    */
-  def davg(c: Column, scale: Int = 2): Column =
-    (sum(c.cast(DecimalType(18, scale))).cast("double") / count(c)).as("avg")
 }

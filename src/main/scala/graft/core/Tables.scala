@@ -33,8 +33,9 @@ object Tables {
     // for the flat file (queries keep the pinned schema). Date-bounded
     // scans still skip data: each month-file's footer min-max on the ts
     // column rejects whole row groups, the one-month-per-file analog of
-    // directory pruning. Full directory pruning needs a part_month
-    // predicate — use Layout.monthBounded on a direct read for that.
+    // directory pruning. Full directory pruning needs a predicate on
+    // part_month itself (Spark does not derive it from ts bounds), on a
+    // direct read of the partitioned directory.
     val df = if (df0.columns.contains("part_month")) df0.drop("part_month")
              else df0
     // events.ts has shipped as TIMESTAMP(NANOS) parquet (read as Long under

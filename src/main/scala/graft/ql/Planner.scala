@@ -179,14 +179,10 @@ object Planner {
   }
 
   /** Numeric threshold filter: "orders over 100000", "customers with
-    * balance below 0". */
-  def extractThreshold(q: String, table: String): Option[String] =
-    extractThresholdAmong(q, Seq(table))
-
-  /** When several joined tables are in play ("orders over 250000 with
-    * customer names"), the threshold binds to the table whose keyword
-    * occurs NEAREST BEFORE the threshold phrase — not to whichever table
-    * won the primary-table ranking. */
+    * balance below 0". When several joined tables are in play ("orders
+    * over 250000 with customer names"), the threshold binds to the table
+    * whose keyword occurs NEAREST BEFORE the threshold phrase — not to
+    * whichever table won the primary-table ranking. */
   def extractThresholdAmong(q: String, tables: Seq[String]): Option[String] = {
     val s = q.toLowerCase.replace(",", "")
     val over = "(?:over|above|more than|greater than|exceeds?|exceeding|at least)\\s+\\$?(\\d+(?:\\.\\d+)?)".r

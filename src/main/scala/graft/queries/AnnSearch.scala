@@ -52,45 +52,14 @@ object AnnSearch {
       FROM embeddings
     )"""
 
-  // ---- scale parameters (defaults = oracle-calibrated test values) -----
-  // At real corpus scale these are the knobs: more LSH bits → more,
-  // smaller buckets (2^bits); higher nprobe → better IVF recall at more
-  // cost. The DuckDB oracles pin the DEFAULT values; the correctness gate
-  // always runs at defaults, larger deployments retune via session conf.
-  private def lshBitsOf(s: SparkSession): Int = {
-    val b = s.conf.get("spark.graft.ann.lshBits", "4").toInt
-    // two constraints: sampled positions i*(64/b)+1, i<b, stay within the
-    // 64-dim vector for any b <= 64, AND signBucket's per-bit weight
-    // (1 << (b-1-i)) is an Int shift — b must stay <= 31 so the weights
-    // are distinct positive Ints (bits >= 32 would wrap mod 32 and alias
-    // distinct sign patterns into one bucket, silently degrading recall)
-    require(b >= 1 && b <= 31,
-      s"spark.graft.ann.lshBits must be in 1..31, got $b")
-    b
-  }
-  private def nprobeOf(s: SparkSession): Int = {
-    val n = s.conf.get("spark.graft.ann.nprobe", "2").toInt
-    require(n >= 1, s"spark.graft.ann.nprobe must be >= 1, got $n")
-    n
-  }
-  private def neardupCosOf(s: SparkSession): Double = {
-    val c = s.conf.get("spark.graft.ann.neardupCos", "0.95").toDouble
-    require(c >= -1.0 && c <= 1.0,
-      s"spark.graft.ann.neardupCos must be in [-1, 1], got $c")
-    c
-  }
-
-  /** The knobs' oracle-calibrated defaults. The correctness harness
-    * (Verify) asserts these before hash-comparing: a non-default session
-    * conf changes only the Spark plan while the DuckDB oracles hardcode
-    * the default bucketing/probe/threshold — a silent desync otherwise. */
-  def assertOracleDefaults(s: SparkSession): Unit =
-    Seq("spark.graft.ann.lshBits" -> "4", "spark.graft.ann.nprobe" -> "2",
-      "spark.graft.ann.neardupCos" -> "0.95").foreach { case (k, d) =>
-      val v = s.conf.get(k, d)
-      require(v == d,
-        s"oracle gate requires $k at its oracle-calibrated default $d, got $v")
-    }
+  // ---- scale parameters, calibrated to the DuckDB oracles -------------
+  // More LSH bits give more, smaller buckets (2^bits); a higher nprobe
+  // gives better IVF recall at more cost. The oracle SQL hardcodes these
+  // values, so they are constants rather than session confs.
+  // LshBits must stay <= 31: signBucket's per-bit weight is an Int shift.
+  private val LshBits = 4
+  private val Nprobe = 2
+  private val NeardupCos = 0.95
 
   /** n-bit sign-signature LSH bucket over a 64-dim double vector column:
     * bit i samples the sign at position i*(64/bits)+1. bits=4 → positions
@@ -190,7 +159,7 @@ object AnnSearch {
           col("norm").as("bn")), Seq("b_id"))
         .select(col("a_id"), col("b_id"),
           round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 6).as("cos"))
-        .filter(col("cos") >= neardupCosOf(s))
+        .filter(col("cos") >= NeardupCos)
     },
 
     // ---- E5a: brute-force cosine top-k (broadcast query set) ------------
@@ -329,11 +298,10 @@ object AnnSearch {
           FROM scored
         ) WHERE rn <= 3
       """)) { (s, dir) =>
-      val bits = lshBitsOf(s)
       val bucketed = withVec(t(s, dir, "embeddings"))
-        .withColumn("bucket", signBucket(col("v"), bits))
+        .withColumn("bucket", signBucket(col("v"), LshBits))
       // multi-probe flip set: own bucket + every hamming-1 neighbor
-      val flips = 0 +: (0 until bits).map(1 << _)
+      val flips = 0 +: (0 until LshBits).map(1 << _)
       val probes = bucketed.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("norm").as("qn"),
@@ -406,9 +374,9 @@ object AnnSearch {
           round(dot(col("qv"), col("centroid")) /
             (col("qn") * sqrt(dot(col("centroid"), col("centroid")))), 6).as("ccos"))
       val wp = Window.partitionBy("q_id").orderBy(col("ccos").desc, col("label"))
-      // nprobe (default 2): search the n nearest cells per query
+      // search the Nprobe nearest cells per query
       val best = probe.withColumn("rn", row_number().over(wp))
-        .filter(col("rn") <= nprobeOf(s))
+        .filter(col("rn") <= Nprobe)
         .select(col("q_id"), col("label"))
       val scored = best.join(q, Seq("q_id")).join(vecs, Seq("label"))
         .filter(col("vec_id") =!= col("q_id"))
@@ -631,14 +599,13 @@ object AnnSearch {
       // two <=3k-row relations. Per-query recall (not one global mean)
       // because the failure mode that matters is QUERIES the probe set
       // misses entirely, which a mean hides.
-      val bits = lshBitsOf(s)
       val bucketed = withVec(t(s, dir, "embeddings"))
-        .withColumn("bucket", signBucket(col("v"), bits))
+        .withColumn("bucket", signBucket(col("v"), LshBits))
         .cache()
       val q = bucketed.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("norm").as("qn"), col("bucket"))
-      val flips = 0 +: (0 until bits).map(1 << _)
+      val flips = 0 +: (0 until LshBits).map(1 << _)
       val probes = q
         .select(col("q_id"), col("qv"), col("qn"),
           explode(array(flips.map(lit): _*)).as("flip"), col("bucket"))

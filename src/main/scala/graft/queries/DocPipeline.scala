@@ -36,10 +36,8 @@ object DocPipeline {
     base.unionByName(variants)
   }
 
-  /** dd31's tokenized corpus — shared with the GrowthProbe canary so a
-    * fixture change here is the ONLY place it can happen; the probe
-    * measures this pipeline by construction, not by copy. */
-  private[graft] def dd31Tok(s: SparkSession, dir: String): DataFrame =
+  /** dd31's tokenized corpus, shared by dd31, dd75 and dd103. */
+  private def dd31Tok(s: SparkSession, dir: String): DataFrame =
     // fan the tokenized rows out before the 8-gram explode: the shingle
     // expansion is the pipeline's dominant per-row work and otherwise
     // runs on however few tasks the documents row groups allow
@@ -53,7 +51,7 @@ object DocPipeline {
   /** dd31's positioned 8-gram shingle relation under the round-11
     * shuffle diet: the exchanged key is the 12-byte pair
     * (xxhash64(gram), hash(gram)), never the gram string. */
-  private[graft] def dd31Shingles(tok: DataFrame): DataFrame =
+  private def dd31Shingles(tok: DataFrame): DataFrame =
     tok.select(col("doc_id"), explode(transform(
       sequence(lit(1), size(col("arr")) - 7),
       i => struct(i.as("s"),
@@ -64,7 +62,7 @@ object DocPipeline {
   /** dd31's duplicated-8-gram hit positions: shingles appearing in >1
     * distinct doc (min≠max — one exchange with map-side combine),
     * joined back to keep (doc, position). */
-  private[graft] def dd31Hits(s: SparkSession, dir: String): DataFrame = {
+  private def dd31Hits(s: SparkSession, dir: String): DataFrame = {
     val sh = dd31Shingles(dd31Tok(s, dir))
     val dup = sh.groupBy(col("g1"), col("g2"))
       .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
@@ -1224,7 +1222,7 @@ object DocPipeline {
       // hashes (P ≈ pairs·2⁻⁹⁶) — and "appears in >1 distinct doc" is
       // min(doc)≠max(doc): one exchange with map-side combine instead of
       // countDistinct's double exchange. Fixture + diet live in
-      // dd31Tok/dd31Shingles/dd31Hits above, shared with the probes.
+      // dd31Tok/dd31Shingles/dd31Hits above.
       val hits = dd31Hits(s, dir)
       // Coverage by INTERVAL MERGE, not explode+distinct (round-11, from
       // the 100× stage profile): expanding every hit to its 8 positions

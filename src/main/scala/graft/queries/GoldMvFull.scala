@@ -37,6 +37,10 @@ object GoldMvFull {
     * evaluation date so refreshes are reproducible. */
   private val Anchor = "1998-06-30"
 
+  /** mv_accuseds_incremental snapshots gold v1 to parquet only when the
+    * lineitem files hold at least this many bytes (see that query). */
+  private val SnapshotMinFactBytes = 512L * 1024 * 1024
+
   /** A9 display formatting (firs_mv.sql:58-71 unit cascade). */
   private def qtyDisplay(qty: Column): Column =
     when(qty >= 100,
@@ -732,10 +736,8 @@ object GoldMvFull {
         val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
         if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
       }
-      val snapshotMinFactBytes = s.conf
-        .get("spark.graft.gold.snapshotMinFactBytes", (512L * 1024 * 1024).toString).toLong
       val goldPrev =
-        if (dirBytes(s"$dir/lineitem.parquet") < snapshotMinFactBytes)
+        if (dirBytes(s"$dir/lineitem.parquet") < SnapshotMinFactBytes)
           buildAccuseds(s, dir, liV1, liV1)
         else {
           val snap = java.nio.file.Paths.get("target", "replay",

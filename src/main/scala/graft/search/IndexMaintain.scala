@@ -52,18 +52,6 @@ object IndexMaintain {
       .select(col("w").as("term"), col("df"), col("cf"), col("posting_head"))
   }
 
-  /** Splice a delta batch (new + whole-document-replaced docs) into the
-    * postings state. The base side is only ever anti-joined against the
-    * (broadcastable) delta doc-id set — no base shuffle. */
-  def splicePostings(base: DataFrame, deltaDocs: DataFrame): DataFrame = {
-    val deltaIds = deltaDocs.select(col("doc_id")).distinct()
-    // re-select: the USING join hoists doc_id to the front; keep the
-    // postings grain's canonical (w, doc_id, tf) order
-    base.join(broadcast(deltaIds), Seq("doc_id"), "left_anti")
-      .select(col("w"), col("doc_id"), col("tf"))
-      .unionByName(postings(deltaDocs))
-  }
-
   /** Refresh the index given the OLD postings state and the delta batch.
     * Returns (new postings state, new index), both lazy: only affected
     * terms' index rows are recomputed. The per-batch caches (delta ids,

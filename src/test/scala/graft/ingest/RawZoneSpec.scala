@@ -34,6 +34,17 @@ class RawZoneSpec extends SparkTestBase {
     df.unpersist()
   }
 
+  test("readCsvDim infers int, double and string columns from a header CSV") {
+    val dir = Files.createTempDirectory("rawzone-csv")
+    Files.writeString(dir.resolve("dim.csv"),
+      "code,rate,name\n1,0.5,alpha\n2,1.25,beta\n")
+    val df = RawZone.readCsvDim(spark, dir.toString)
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      Seq("code" -> IntegerType, "rate" -> DoubleType, "name" -> StringType))
+    assert(df.orderBy("code").collect().map(r => (r.getInt(0), r.getDouble(1), r.getString(2)))
+      .toSeq == Seq((1, 0.5, "alpha"), (2, 1.25, "beta")))
+  }
+
   test("schema evolution: new fields union in, stored types win, names infer types") {
     val stored = StructType(Seq(
       StructField("crime_id", StringType),
