@@ -273,6 +273,11 @@ object NativeExpressions {
   def uuid_v5_native(c: Column): Column = column(UuidV5(expression(c)))
   def trigram_sim_native(a: Column, b: Column): Column =
     column(TrigramSimilarity(expression(a), expression(b)))
+  /** Sequential-fold dot product of two double arrays (matches the
+    * C-loop order of DuckDB's list_dot_product): bit-exact with the
+    * `aggregate(zip_with(...))` formulation (NativeExpressionsSpec pins
+    * it) but one fused JVM loop instead of an intermediate product array
+    * and interpreted lambdas. */
   def dot_native(a: Column, b: Column): Column =
     column(DotProduct(expression(a), expression(b)))
   def jaro_winkler_native(a: Column, b: Column): Column =

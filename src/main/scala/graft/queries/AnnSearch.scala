@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
+import graft.functions.NativeExpressions.dot_native
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §2.8 E5; reference shape `core/geo_resolver.py:86-235`):
@@ -26,22 +27,10 @@ import graft.core.Tables
   */
 object AnnSearch {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
-  /** Sequential-fold dot product of two double arrays (matches the
-    * C-loop order of DuckDB's list_dot_product). Native codegen
-    * expression — bit-exact with the `aggregate(zip_with(...))`
-    * formulation (NativeExpressionsSpec pins it) but a single fused JVM
-    * loop instead of an intermediate product array + interpreted
-    * lambdas. */
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.NativeExpressions.dot_native(a, b)
-
   private def withVec(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("label"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+      .withColumn("norm", sqrt(dot_native(col("v"), col("v"))))
 
   private val vecSql = """
     vecs AS (
@@ -135,7 +124,7 @@ object AnnSearch {
           concat(array(element_at(col("v"), 1) * 1.01),
             slice(col("v"), lit(2), size(col("v")) - 1)).as("v"))
       val allv = vecs0.unionByName(dups)
-        .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("norm", sqrt(dot_native(col("v"), col("v"))))
         .cache()
       val chunkStructs = (1 to 4).map { j =>
         val bits = (1 to 16).map(i =>
@@ -158,7 +147,7 @@ object AnnSearch {
         .join(allv.select(col("vec_id").as("b_id"), col("v").as("bv"),
           col("norm").as("bn")), Seq("b_id"))
         .select(col("a_id"), col("b_id"),
-          round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 6).as("cos"))
+          round(dot_native(col("av"), col("bv")) / (col("an") * col("bn")), 6).as("cos"))
         .filter(col("cos") >= NeardupCos)
     },
 
@@ -190,7 +179,7 @@ object AnnSearch {
       val scored = vecs.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
       val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select(col("q_id"), col("cand_id"), col("cos"))
@@ -249,7 +238,7 @@ object AnnSearch {
       val scored = vecs.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
       val wTop = Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))
       val top3 = scored.withColumn("rn", row_number().over(wTop))
         .filter(col("rn") <= 3).select(col("q_id"), col("cand_id"), col("cos"))
@@ -313,7 +302,7 @@ object AnnSearch {
           col("bucket") === col("probe_bucket"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"), col("bucket"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
       val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select(col("q_id"), col("cand_id"), col("bucket"), col("cos"))
@@ -371,8 +360,8 @@ object AnnSearch {
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qn"))
       val probe = q.crossJoin(broadcast(cells))
         .select(col("q_id"), col("label"),
-          round(dot(col("qv"), col("centroid")) /
-            (col("qn") * sqrt(dot(col("centroid"), col("centroid")))), 6).as("ccos"))
+          round(dot_native(col("qv"), col("centroid")) /
+            (col("qn") * sqrt(dot_native(col("centroid"), col("centroid")))), 6).as("ccos"))
       val wp = Window.partitionBy("q_id").orderBy(col("ccos").desc, col("label"))
       // search the Nprobe nearest cells per query
       val best = probe.withColumn("rn", row_number().over(wp))
@@ -381,7 +370,7 @@ object AnnSearch {
       val scored = best.join(q, Seq("q_id")).join(vecs, Seq("label"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"), col("label"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
       val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select(col("q_id"), col("cand_id"), col("label"), col("cos"))
@@ -436,7 +425,7 @@ object AnnSearch {
       val base = t(s, dir, "embeddings").select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
       val unitv = base.select(col("vec_id"),
-        transform(col("v"), x => x / sqrt(dot(col("v"), col("v")))).as("vn"))
+        transform(col("v"), x => x / sqrt(dot_native(col("v"), col("v")))).as("vn"))
       val qz = unitv
         .withColumn("s",
           greatest(array_max(transform(col("vn"), y => abs(y))) / 127.0, lit(1e-12)))
@@ -521,7 +510,7 @@ object AnnSearch {
         val packed = cents.groupBy()
           .agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cs"))
         val d = (c: Column) =>
-          round(dot(col("v"), col("v")) + dot(c, c) - lit(2) * dot(col("v"), c), 6)
+          round(dot_native(col("v"), col("v")) + dot_native(c, c) - lit(2) * dot_native(col("v"), c), 6)
         vecs.crossJoin(broadcast(packed))
           .withColumn("ds", transform(col("cs"), c => d(c.getField("cv"))))
           .withColumn("cluster",
@@ -615,14 +604,14 @@ object AnnSearch {
       val lshTop = bucketed.join(probes, col("bucket") === col("probe_bucket"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select(col("q_id"), col("cand_id"))
       val truthTop = bucketed.crossJoin(broadcast(
           q.select(col("q_id"), col("qv"), col("qn"))))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select(col("q_id"), col("cand_id"))
       truthTop.as("t")
@@ -692,7 +681,7 @@ object AnnSearch {
       // full width; the MRL paper's entire point).
       val pref = withVec(t(s, dir, "embeddings"))
         .withColumn("p", slice(col("v"), 1, 16))
-        .withColumn("pnorm", sqrt(dot(col("p"), col("p"))))
+        .withColumn("pnorm", sqrt(dot_native(col("p"), col("p"))))
         .cache()
       val q = pref.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qn"),
@@ -702,19 +691,19 @@ object AnnSearch {
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"), col("qv"), col("qn"),
           col("v"), col("norm"),
-          round(dot(col("qp"), col("p")) / (col("qpn") * col("pnorm")), 6).as("pcos"))
+          round(dot_native(col("qp"), col("p")) / (col("qpn") * col("pnorm")), 6).as("pcos"))
         .withColumn("crn", row_number().over(wCoarse)).filter(col("crn") <= 20)
       val wFull = Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))
       val mrlTop = coarse
         .select(col("q_id"), col("cand_id"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
         .withColumn("rn", row_number().over(wFull)).filter(col("rn") <= 3)
         .select(col("q_id"), col("cand_id"))
       val truthTop = pref.crossJoin(broadcast(
           q.select(col("q_id"), col("qv"), col("qn"))))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
         .withColumn("rn", row_number().over(wFull)).filter(col("rn") <= 3)
         .select(col("q_id"), col("cand_id"))
       truthTop.as("t")
@@ -763,7 +752,7 @@ object AnnSearch {
       // sketches and every coarse score match bit-for-bit.
       val vecs = withVec(t(s, dir, "embeddings"))
       val red = vecs.withColumn("r", array(
-        (0 until 16).map(j => dot(col("v"), typedLit(RpSigns(j)))): _*))
+        (0 until 16).map(j => dot_native(col("v"), typedLit(RpSigns(j)))): _*))
       val q = red.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("norm").as("qn"), col("r").as("qr"))
@@ -771,10 +760,10 @@ object AnnSearch {
         .filter(col("vec_id") =!= col("q_id"))
         .withColumn("crn", row_number().over(
           Window.partitionBy("q_id")
-            .orderBy(dot(col("qr"), col("r")).desc, col("vec_id"))))
+            .orderBy(dot_native(col("qr"), col("r")).desc, col("vec_id"))))
         .filter(col("crn") <= 50)
       val rer = coarse.select(col("q_id"), col("vec_id").as("cand_id"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+        round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
       rer.withColumn("rn", row_number().over(
           Window.partitionBy("q_id").orderBy(col("cos").desc, col("cand_id"))))
         .filter(col("rn") <= 3)
@@ -843,15 +832,15 @@ object AnnSearch {
         JOIN norms nb ON nb.label = d.label_b
       """)) { (s, dir) =>
       import org.apache.spark.sql.types.DecimalType
-      // ONE corpus pass: explode to (label, dim, component), fold to exact
-      // decimal sums — 64 x |labels| rows from here on
+      // explode to (label, dim, component), fold to exact decimal sums —
+      // 64 x |labels| rows from here on. Not cached: folding again for each
+      // of its three readers measured faster than caching the fold
       val comps = t(s, dir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("dim0", "x")))
         .select(col("label"), (col("dim0") + 1).as("dim"),
           round(col("x").cast("double"), 6).cast(DecimalType(16, 6)).as("x"))
         .groupBy("label", "dim")
         .agg(sum(col("x")).cast(DecimalType(16, 6)).as("sx"))
-        .cache()
       val norms = comps.groupBy("label")
         .agg(sum(col("sx") * col("sx")).cast(DecimalType(38, 12)).as("n2"))
       val dots = comps.as("a")

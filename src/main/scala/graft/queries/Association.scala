@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Corpus-association and graph-structure analytics: collocation mining
   * (PMI), triangle counting over a co-occurrence graph, and
@@ -18,9 +17,6 @@ import graft.core.Tables
   * oriented to avoid double enumeration (the triangle join).
   */
 object Association {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

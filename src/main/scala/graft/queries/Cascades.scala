@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Match-cascade operators: the reference resolves fuzzy references by
   * trying strategies in confidence order and keeping the first/best hit.
@@ -26,9 +26,6 @@ import graft.core.Tables
   * tier touches only still-unmatched rows.
   */
 object Cascades {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** `normalize_text` analog (mandal_imputation_from_address.py:204-224):
     * lowercase, collapse non-alphanumeric runs to single spaces, trim. */

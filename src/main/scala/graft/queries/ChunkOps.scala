@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Content-defined chunking (Muthitacharoen/Chen/Mazières SOSP'01 — the
   * LBFS primitive behind every dedup store: restic, borg, Venti): chunk
@@ -15,9 +15,6 @@ import graft.core.Tables
   * Token-granularity variant over the documents corpus.
   */
 object ChunkOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** Split each doc into content-defined chunks: a token closes its chunk
     * when h32(token) % divisor == 0 (expected chunk length = divisor

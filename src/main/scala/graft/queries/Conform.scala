@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Silver-layer conform operators (SURVEY.md §2.2 P1–P12 + §2.4 J2 +
   * §2.1 S2): field-map projection with a canonical catch-all, blank and
@@ -14,9 +13,6 @@ import graft.core.Tables
   * optional-FK left-join chains, and the date-range chunk generator.
   */
 object Conform {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

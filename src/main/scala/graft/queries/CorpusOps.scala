@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Round-11 corpus-preparation batch: the training-data operators a
   * 100 TB pipeline runs between ingestion and tokenization that the
@@ -21,9 +20,6 @@ import graft.core.Tables
   * vocabularies — never document text.
   */
 object CorpusOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

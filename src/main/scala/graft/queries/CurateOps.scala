@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
+import graft.search.IndexMaintain
 
 /** Release-gate curation operators: the audits and joins that sit between
   * "the corpus is deduped" and "the corpus ships" — an EXACT set-similarity
@@ -18,9 +18,6 @@ import graft.core.Tables
   * round(9) into DECIMAL so sums are order-free, output doubles round(6).
   */
 object CurateOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -284,10 +281,7 @@ object CurateOps {
       // is |docs| x 3 — the qterm side broadcasts at any corpus size, and
       // the LEFT join keeps zero-tf docs scoreable (the whole point of
       // smoothing; an inner join would silently drop them).
-      val tf = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf"))
-        .cache()
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
       val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       val tot = dl.agg(sum(col("dl")).as("t"))
       val dfr = tf.groupBy(col("w"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Warehouse-dimensional operators the inventory lacked: recursive
   * hierarchy expansion with subtree rollups (the BOM-explosion /
@@ -26,9 +26,6 @@ import graft.core.Tables
   * windows — one shuffle on the dimension key, any number of versions.
   */
 object Dimensional {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** The SCD2 version table s13 materializes, as a reusable input for
     * point-in-time lookups (j17). One shuffle on the dimension key; all

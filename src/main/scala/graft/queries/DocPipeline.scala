@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Training-data document pipeline: deduplication (exact, MinHash+LSH,
   * SimHash signatures, n-gram Jaccard) and text analysis (quality
@@ -21,9 +21,6 @@ import graft.core.Tables
   * O(docs × bands), verification touches only band-colliding pairs.
   */
 object DocPipeline {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** Corpus with planted near-duplicates: every 5th doc reappears with
     * its first 3 tokens stripped (id + 10000) — exercising the near-dup
@@ -1533,14 +1530,14 @@ object DocPipeline {
         (0 until 16).map(b =>
           when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
+      // detected and truth each feed two counts; neither is cached, since
+      // recomputing them measured faster than caching them
       val detected = sig.as("a").join(sig.as("b"),
           col("a.simhash") === col("b.simhash") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .cache()
       val truth = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
         .select(col("doc_id").as("a_id"), (col("doc_id") + 10000).as("b_id"))
-        .cache()
       val nTp = detected.join(truth, Seq("a_id", "b_id"), "left_semi")
         .agg(count(lit(1)).as("n_tp"))
       val nDet = detected.agg(count(lit(1)).as("n_detected"))

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Remaining SURVEY.md §2 operators: name-part repair (T18), keep-one
   * cascade repair (W6), keyset pagination (W7), incremental discovery
@@ -14,9 +14,6 @@ import graft.core.Tables
   * (L1), and schema-validated extraction with quarantine (L2).
   */
 object Extras {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.{Parity, Tables}
+import graft.core.Parity
+import graft.core.Tables.{apply => t}
 
 /** Gold materialized-view pipelines (SURVEY.md §3.2): the reference's 5 MVs
   * are one parent scan + ~20 correlated scalar subqueries each
@@ -19,12 +20,9 @@ import graft.core.{Parity, Tables}
   */
 object GoldMv {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
   /** A9: grouped sum → unit-formatted display string (firs_mv.sql:58-71).
     * Exact decimal division by 1000 (3 digits, never rounds). */
-  private def qtyDisplay(qtyTot: Column): Column =
+  private[queries] def qtyDisplay(qtyTot: Column): Column =
     when(qtyTot >= 100,
       concat((qtyTot.cast("decimal(15,2)") / 100).cast("decimal(18,2)").cast("string"),
         lit(" H units")))

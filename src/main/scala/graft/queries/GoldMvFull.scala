@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Full-breadth gold MV pipelines (SURVEY.md §3.2). The reference's
   * `firs_mv.sql:40-229` composes ~20 correlated scalar subqueries over a
@@ -29,9 +29,6 @@ import graft.core.Tables
   */
 object GoldMvFull {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
   /** Deterministic "today" for the stipulated-period buckets — the
     * reference uses now() (firs_mv.sql:26-33); a gold build pins the
     * evaluation date so refreshes are reproducible. */
@@ -40,14 +37,6 @@ object GoldMvFull {
   /** mv_accuseds_incremental snapshots gold v1 to parquet only when the
     * lineitem files hold at least this many bytes (see that query). */
   private val SnapshotMinFactBytes = 512L * 1024 * 1024
-
-  /** A9 display formatting (firs_mv.sql:58-71 unit cascade). */
-  private def qtyDisplay(qty: Column): Column =
-    when(qty >= 100,
-      concat((qty.cast("decimal(15,2)") / 100).cast("decimal(18,2)").cast("string"),
-        lit(" H units")))
-      .when(qty > 0, concat(qty.cast("string"), lit(" units")))
-      .otherwise("N/A")
 
   private val QtyDisplaySql =
     """CASE WHEN %1$s >= 100
@@ -241,7 +230,7 @@ object GoldMvFull {
           coalesce(col("accused_details"), lit("[]")).as("accused_details"),
           coalesce(col("drug_type"), lit("[]")).as("drug_type"),
           coalesce(col("drug_with_quantity"), lit("[]")).as("drug_with_quantity"),
-          qtyDisplay(coalesce(col("qty_tot"), lit(0L))).as("qty_display"),
+          GoldMv.qtyDisplay(coalesce(col("qty_tot"), lit(0L))).as("qty_display"),
           coalesce(col("conviction_count"), lit(0L)).as("conviction_count"),
           coalesce(col("acquittal_count"), lit(0L)).as("acquittal_count"),
           coalesce(col("total_disposals"), lit(0L)).as("total_disposals"),

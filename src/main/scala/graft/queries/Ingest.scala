@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 import graft.streaming.EventsStream
 
 /** Incremental-ingestion operators (SURVEY.md §2.1 S3) and the batch
@@ -13,9 +13,6 @@ import graft.streaming.EventsStream
   * functions run unmodified over a streaming source in StreamingSpec.
   */
 object Ingest {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** Working dir for a replay-parity maintainer: rooted under target/ (so
     * build cleaning removes it) and wiped at each invocation start, so

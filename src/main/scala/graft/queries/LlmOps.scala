@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.{Parity, Tables}
+import graft.core.Tables.{apply => t}
 
 /** Deterministic post-processing operators around the reference's LLM
   * extraction pipeline (SURVEY.md §2.9 L4–L8 / A10–A12): role keyword
@@ -15,9 +14,6 @@ import graft.core.{Parity, Tables}
   * these are the engine-relevant kernels.
   */
 object LlmOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 import graft.merge.MergeKernels
 
 /** Oracle-gated queries for the merge/sink kernels (SURVEY.md §2.1
@@ -17,9 +17,6 @@ import graft.merge.MergeKernels
   *            some NULL priorities — fields the API omitted)
   */
 object MergeQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** Shared fixture CTEs, DuckDB side. */
   private val fixtureSql = """

@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Corpus planning + survivorship operators: the "what do we actually
   * train on" layer that sits above the dedup/quality funnel (dd17) —
@@ -19,9 +18,6 @@ import graft.core.Tables
   * written identically on the Spark and DuckDB sides, outputs round(6).
   */
 object MixOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

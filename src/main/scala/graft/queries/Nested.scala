@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.QueryDef
-import graft.core.{Parity, Tables}
+import graft.core.Parity
+import graft.core.Tables.{apply => t}
 
 /** JSON / array / map operators (SURVEY.md §2.7 N1–N8): the reference's
   * JSONB-heavy surface — array explode with ordinality, typed extraction
@@ -14,9 +15,6 @@ import graft.core.{Parity, Tables}
   * canonical (key-sorted) JSON for change detection.
   */
 object Nested {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** N4 at reference breadth: the reference fans one parent document into
     * ~24 child tables driven by a declarative child-spec list

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** OLAP-surface operators the reference's reporting layer leans on
   * (subtotal pyramids, cross-tabs, user sessionization) plus the
@@ -18,9 +18,6 @@ import graft.core.Tables
   * shapes survive a 1000-executor deployment unchanged.
   */
 object OlapOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Distribution-health probes: PSI drift between two time windows of the
   * order fact (the model-monitoring twin of dd43's corpus-level JS
@@ -14,9 +14,6 @@ import graft.core.Tables
   * curation pass runs per document).
   */
 object QualityProbes {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.QueryDef
-import graft.core.{Parity, Tables}
+import graft.core.Parity
+import graft.core.Tables.{apply => t}
 
 /** Core relational operators from SURVEY.md §2: projection/filter (P*),
   * joins (J*), aggregations (A*), windows/sort/limit (W*) — all expressed
@@ -13,9 +14,6 @@ import graft.core.{Parity, Tables}
   * broadcast vs shuffle join.
   */
 object Relational {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

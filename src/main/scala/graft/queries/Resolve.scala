@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Entity resolution (SURVEY.md §2.8 E1–E3): tiered md5 fingerprint
   * dedup with fall-through, blocked fuzzy matching, and weighted
@@ -15,9 +15,6 @@ import graft.core.Tables
   * `create_person_deduplication_table.py:619-653`).
   */
 object Resolve {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,11 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.{Parity, Tables}
+import graft.core.Parity
+import graft.core.Tables.{apply => t}
+import graft.functions.NativeExpressions.dot_native
 
 /** Scale-pattern operators: the join/sampling/sketch shapes a 100 TB
   * deployment leans on once the basic relational inventory is done.
@@ -30,12 +32,6 @@ import graft.core.{Parity, Tables}
   *     don't sample them — reproducible export layout).
   */
 object ScaleOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.NativeExpressions.dot_native(a, b)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -182,7 +178,7 @@ object ScaleOps {
       val packed = seeds.groupBy()
         .agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cs"))
       val dist = (c: Column) =>
-        round(dot(col("v"), col("v")) + dot(c, c) - lit(2) * dot(col("v"), c), 6)
+        round(dot_native(col("v"), col("v")) + dot_native(c, c) - lit(2) * dot_native(col("v"), c), 6)
       val assigned = allv.crossJoin(broadcast(packed))
         .withColumn("ds", transform(col("cs"), c => dist(c.getField("cv"))))
         .withColumn("cluster",
@@ -192,12 +188,12 @@ object ScaleOps {
             .when(col("ds")(2) <= col("ds")(3), 2)
             .otherwise(3))
         .select(col("vec_id"), col("cluster"), col("v"),
-          sqrt(dot(col("v"), col("v"))).as("nrm"))
+          sqrt(dot_native(col("v"), col("v"))).as("nrm"))
       val lhs = assigned.select(col("cluster"), col("vec_id").as("a_id"),
         col("v").as("av"), col("nrm").as("an"))
       val dupIds = lhs.join(assigned, Seq("cluster"))
         .filter(col("a_id") < col("vec_id"))
-        .filter(round(dot(col("av"), col("v")) / (col("an") * col("nrm")), 6) >= 0.99)
+        .filter(round(dot_native(col("av"), col("v")) / (col("an") * col("nrm")), 6) >= 0.99)
         .select(col("vec_id")).distinct()
         .withColumn("is_semdup", lit(true))
       assigned.select(col("vec_id"), col("cluster"))

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
+import graft.search.{Bm25, IndexMaintain}
 
 /** Text-retrieval surface over the document corpus: inverted-index
   * construction and BM25 ranked search. The reference reaches for
@@ -25,13 +25,6 @@ import graft.core.Tables
   */
 object SearchRank {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
-  private def tok(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- IR1: inverted index with impact-ordered posting heads ----------
@@ -50,21 +43,7 @@ object SearchRank {
                string_agg(CASE WHEN rn <= 3 THEN doc_id || ':' || tf END, ',' ORDER BY rn) AS posting_head
         FROM heads GROUP BY w HAVING count(*) >= 2
       """)) { (s, dir) =>
-      val tf = tok(s, dir).groupBy(col("w"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"))
-      val wW = Window.partitionBy(col("w")).orderBy(col("tf").desc, col("doc_id"))
-      // window then groupBy on the same key: the exchange is planned once
-      // — df/cf aggregate over ALL postings while the head keeps rn<=3
-      // (collect_list skips the nulls the WHEN produces)
-      tf.withColumn("rn", row_number().over(wW))
-        .groupBy(col("w"))
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-          concat_ws(",", transform(
-            array_sort(collect_list(when(col("rn") <= 3,
-              struct(col("rn"), concat_ws(":", col("doc_id"), col("tf")).as("s"))))),
-            x => x.getField("s"))).as("posting_head"))
-        .filter(col("df") >= 2)
-        .select(col("w").as("term"), col("df"), col("cf"), col("posting_head"))
+      IndexMaintain.buildIndex(IndexMaintain.postings(t(s, dir, "documents")))
     },
 
     // ---- IR2: BM25 ranked retrieval -------------------------------------
@@ -91,25 +70,12 @@ object SearchRank {
       // ONE corpus pass: tf is the only relation built from tokens; doc
       // length, df, and the scoring join all derive from it (cached — it
       // is the index a retrieval system materializes anyway)
-      val tf = tok(s, dir).groupBy(col("w"), col("doc_id"))
-        .agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
       // top-3 df terms: TakeOrderedAndProject (distributed top-k), then the
       // 3-row result broadcasts into the scoring join
-      val qterms = df.orderBy(col("df").desc, col("w")).limit(3)
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val contrib = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
-      contrib.groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tf), 3)
+      Bm25.docScores(Bm25.contributions(tf, qterms, dl), "bm25")
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
     },
 
@@ -179,7 +145,6 @@ object SearchRank {
                string_agg(CASE WHEN rn <= 3 THEN doc_id || ':' || tf END, ',' ORDER BY rn) AS posting_head
         FROM heads GROUP BY w HAVING count(*) >= 2
       """)) { (s, dir) =>
-      import graft.search.IndexMaintain
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val base = docs.filter(col("doc_id") % 7 =!= 0)
       val delta = docs.filter(col("doc_id") % 7 === 0)
@@ -222,24 +187,12 @@ object SearchRank {
         FROM cand c JOIN prox p ON c.doc_id = p.doc_id
         ORDER BY p.first_pos_sum ASC, c.bm25 DESC, c.doc_id LIMIT 10
       """)) { (s, dir) =>
-      val tf = tok(s, dir).groupBy(col("w"), col("doc_id"))
-        .agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val dfRel = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = dfRel.orderBy(col("df").desc, col("w")).limit(3)
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val scored = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tf), 3)
+      val scored = Bm25.contributions(tf, qterms, dl)
         .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("matched"),
-          round(sum(col("c")).cast("double"), 6).as("bm25"))
+        .agg(count(lit(1)).cast("long").as("matched"), Bm25.total(col("c")).as("bm25"))
       // cand is consumed twice (positional filter + final join): cache the
       // 50-row result instead of recomputing the whole scoring pipeline
       val cand = scored.orderBy(col("bm25").desc, col("doc_id")).limit(50).cache()
@@ -312,22 +265,15 @@ object SearchRank {
       // order-free; the half-weight expansion terms are exact binary
       // fractions (0.5), so the weighting introduces no cross-engine
       // float drift.
-      val tf = tok(s, dir).groupBy(col("w"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"))
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")).cache()
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
+      val tf = IndexMaintain.postings(t(s, dir, "documents"))
+      val dl = Bm25.docLengths(tf).cache()
+      val n = Bm25.corpusStats(dl)
       val tfd = tf.join(dl, Seq("doc_id")).cache()
-      val df = tfd.groupBy(col("w")).agg(count(lit(1)).as("df")).cache()
-      val seed = df.orderBy(col("df").desc, col("w")).limit(3)
-      def bm25c(dfCol: Column): Column =
-        log((col("n").cast("double") - dfCol + 0.5) / (dfCol + 0.5) + 1) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-      val s1 = tfd.join(broadcast(seed), Seq("w"))
+      val df = Bm25.docFreqs(tfd).cache()
+      val seed = Bm25.topTerms(df, 3)
+      val s1 = Bm25.docScores(tfd.join(broadcast(seed), Seq("w"))
         .crossJoin(broadcast(n))
-        .select(col("doc_id"), round(bm25c(col("df")), 9).cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
+        .select(col("doc_id"), Bm25.frozen(Bm25.weight(col("df"))).as("c")), "bm25")
       val fb = s1.orderBy(col("bm25").desc, col("doc_id")).limit(5)
         .select(col("doc_id"))
       val exp0 = tfd.join(broadcast(fb), Seq("doc_id"))
@@ -345,12 +291,10 @@ object SearchRank {
       // the 5-row broadcast — never the vocabulary table
       val qall = seed.select(col("w"), col("df"), lit(1.0).as("wt"))
         .unionByName(exps.select(col("w"), col("df"), lit(0.5).as("wt")))
-      tfd.join(broadcast(qall), Seq("w"))
+      Bm25.docScores(tfd.join(broadcast(qall), Seq("w"))
         .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(col("wt") * bm25c(col("df")), 9).cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("score"))
+        .select(col("doc_id"), Bm25.frozen(col("wt") * Bm25.weight(col("df"))).as("c")),
+        "score")
         .orderBy(col("score").desc, col("doc_id")).limit(10)
     },
 
@@ -411,23 +355,10 @@ object SearchRank {
       // positions self-join). Both engines index the split array 1-based
       // here (posexplode is 0-based → +1), making best_start and the
       // slice cross-engine identical.
-      val tf = tok(s, dir).groupBy(col("w"), col("doc_id"))
-        .agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = df.orderBy(col("df").desc, col("w")).limit(3)
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val cand = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tf), 3)
+      val cand = Bm25.docScores(Bm25.contributions(tf, qterms, dl), "bm25")
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
         .cache()
       val arrs = t(s, dir, "documents")
@@ -505,15 +436,10 @@ object SearchRank {
       // apart things that should rank together. The bag-key join is the
       // same dedup key dd1 gates on, so "hard negative" here means
       // lexically-close-but-distinct by the engine's own dedup notion.
-      val tf = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf"))
-        .cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val nRel = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val dfr = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
       val q = tf.filter(col("doc_id") % 100 === 0)
-        .join(dfr, Seq("w"))
+        .join(Bm25.docFreqs(tf), Seq("w"))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("doc_id")).orderBy(col("df"), col("w"))))
         .filter(col("rn") <= 3)
@@ -521,18 +447,11 @@ object SearchRank {
       val bag = t(s, dir, "documents").select(col("doc_id"),
         md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
           .as("k"))
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val scored = tf.join(broadcast(q), Seq("w"))
-        .filter(col("doc_id") =!= col("q_id"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(nRel))
-        .select(col("q_id"), col("doc_id").as("neg_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
-      val agg = scored.groupBy(col("q_id"), col("neg_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
+      val agg = Bm25.contributions(tf, q, dl,
+          Seq(col("q_id"), col("doc_id").as("neg_id")))
+        .filter(col("neg_id") =!= col("q_id"))
+        .groupBy(col("q_id"), col("neg_id"))
+        .agg(Bm25.total(col("c")).as("bm25"))
       val filt = agg
         .join(bag.select(col("doc_id").as("q_id"), col("k").as("kq")), Seq("q_id"))
         .join(bag.select(col("doc_id").as("neg_id"), col("k").as("kn")), Seq("neg_id"))
@@ -597,26 +516,13 @@ object SearchRank {
       // bounded self-join; tau-b's single sqrt division is the only
       // float. Scores compare after round(6), so tie detection is
       // cross-engine exact.
-      val tf = tok(s, dir).groupBy(col("w"), col("doc_id"))
-        .agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")).cache()
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = df.orderBy(col("df").desc, col("w")).limit(3)
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf).cache()
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tf), 3)
       val cf = tf.join(broadcast(qterms.select(col("w"))), Seq("w"))
         .groupBy(col("w")).agg(sum(col("tf")).as("cf"))
       val ctot = dl.agg(sum(col("dl")).as("ctot"))
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val cut = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
+      val cut = Bm25.docScores(Bm25.contributions(tf, qterms, dl), "bm25")
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
         .cache()
       val grid = cut.select(col("doc_id"))
@@ -718,21 +624,16 @@ object SearchRank {
           sum(lit(1) - col("ist")).cast("long").as("lb"))
       val g = fl.agg(count(lit(1)).as("n"), sum(col("lt")).cast("long").as("slt"),
         sum(col("lb")).cast("long").as("slb"))
-      val df = tff.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = df.orderBy(col("df").desc, col("w")).limit(3)
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tff), 3)
       val ntft = col("tft") / (lit(1.0) + lit(0.5)
         * (col("lt") / (col("slt").cast("double") / col("n")) - 1))
       val ntfb = col("tfb") / (lit(1.0) + lit(0.75)
         * (col("lb") / (col("slb").cast("double") / col("n")) - 1))
-      val idf = log((col("n").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-      tff.join(broadcast(qterms), Seq("w"))
+      Bm25.docScores(tff.join(broadcast(qterms), Seq("w"))
         .join(fl, Seq("doc_id"))
         .crossJoin(broadcast(g))
-        .select(col("doc_id"),
-          round(idf * (lit(2.0) * ntft + ntfb) / (lit(1.2) + lit(2.0) * ntft + ntfb), 9)
-            .cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25f"))
+        .select(col("doc_id"), Bm25.frozen(Bm25.idf(col("df")) *
+          (lit(2.0) * ntft + ntfb) / (lit(1.2) + lit(2.0) * ntft + ntfb)).as("c")), "bm25f")
         .orderBy(col("bm25f").desc, col("doc_id")).limit(10)
     },
 
@@ -788,24 +689,16 @@ object SearchRank {
                  AS pruned_frac
         FROM top CROSS JOIN st
       """)) { (s, dir) =>
-      val tf = tok(s, dir).groupBy(col("w"), col("doc_id"))
-        .agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = df.orderBy(col("df").desc, col("w")).limit(3)
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
+      val df = Bm25.docFreqs(tf)
+      val qterms = Bm25.topTerms(df, 3)
       // the query's postings with their DECIMAL-rounded BM25 contribution
       // and an 8-doc block id (blk = doc_id >> 3, matching the oracle's
       // doc_id // 8); query-bounded (3 terms), cached — both passes and
       // all four counters read it
-      val postq = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id")).crossJoin(broadcast(n))
-        .select(col("w"), col("doc_id"), shiftright(col("doc_id"), 3).as("blk"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
+      val postq = Bm25.contributions(tf, qterms, dl,
+          Seq(col("w"), col("doc_id"), shiftright(col("doc_id"), 3).as("blk")))
         .cache()
       // pass 1: per-term top-decile impact champions -> theta, a DECIMAL
       // lower bound on the true 10th-best score (champion partial sums
@@ -834,8 +727,7 @@ object SearchRank {
       val cand = bsum.crossJoin(theta).filter(col("bsum") >= col("theta"))
         .select(col("blk"))
       val scored = postq.join(cand, Seq("blk")).cache()
-      val top = scored.groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
+      val top = Bm25.docScores(scored, "bm25")
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
       val stats = broadcast(
         bsum.agg(count(lit(1)).as("blocks_total"))

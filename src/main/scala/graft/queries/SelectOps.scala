@@ -5,7 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
+import graft.functions.NativeExpressions.dot_native
+import graft.search.{Bm25, IndexMaintain}
 
 /** Data-selection operators: the pass that decides WHICH documents train —
   * importance resampling toward a target distribution (DSIR, Xie et al.
@@ -23,9 +25,6 @@ import graft.core.Tables
   * cross-engine-deterministic hashing (Spark hash() != DuckDB hash()).
   */
 object SelectOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -331,10 +330,9 @@ object SelectOps {
       // The dense and lexical rankers run INDEPENDENTLY (no barrier
       // between them in the plan — Spark schedules both subtrees); each
       // ends in a 50-row TakeOrdered, so the fusion input is 100 rows.
-      val dotN = (a: Column, b: Column) => graft.functions.NativeExpressions.dot_native(a, b)
       val vecs = t(s, dir, "embeddings")
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", sqrt(dotN(col("v"), col("v"))))
+        .withColumn("norm", sqrt(dot_native(col("v"), col("v"))))
       val cent0 = vecs
         .select(posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("i"))
@@ -343,45 +341,20 @@ object SelectOps {
       val cent = cent0
         .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("a"))
         .select(transform(col("a"), e => e.getField("c")).as("cv"))
-        .withColumn("cn", sqrt(dotN(col("cv"), col("cv"))))
-      // rank WITHOUT a global window: the top-50 cut is a distributed
-      // TakeOrdered; ranks within the bounded 50-row result come from a
-      // broadcast inequality self-join (rank = 1 + rows strictly ahead) —
-      // the same tiny-relation inequality-join shape as dd40's offsets
-      def rankTop50(scored: DataFrame, score: String): DataFrame = {
-        val top = scored.orderBy(col(score).desc, col("id")).limit(50)
-        val ahead = top.as("b")
-          .select(col(s"b.$score").as("bs"), col("b.id").as("bid"))
-        top.as("a").join(broadcast(ahead),
-            col("bs") > col(score) ||
-              (col("bs") === col(score) && col("bid") < col("id")), "left")
-          .groupBy(col("id"))
-          .agg((lit(1) + count(col("bid"))).cast("int").as("rnk"))
-      }
+        .withColumn("cn", sqrt(dot_native(col("cv"), col("cv"))))
+      // rank WITHOUT a global window (Bm25.rankTop): the top-50 cut is a
+      // distributed TakeOrdered, ranks within it a broadcast inequality
+      // self-join — the same tiny-relation shape as dd40's offsets
       val vScored = vecs.crossJoin(broadcast(cent))
         .select(col("vec_id").as("id"),
-          round(dotN(col("v"), col("cv")) / (col("norm") * col("cn")), 6).as("cos"))
-      val vrank = rankTop50(vScored, "cos")
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val tf = tok.groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val dfr = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = dfr.orderBy(col("df").desc, col("w")).limit(3)
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val contrib = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
-      val trank = rankTop50(
-        contrib.groupBy(col("doc_id"))
-          .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
-          .select(col("doc_id").as("id"), col("bm25")), "bm25")
+          round(dot_native(col("v"), col("cv")) / (col("norm") * col("cn")), 6).as("cos"))
+      val vrank = Bm25.rankTop(vScored, "cos", "id", 50)
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tf), 3)
+      val trank = Bm25.rankTop(
+        Bm25.docScores(Bm25.contributions(tf, qterms, dl), "bm25")
+          .select(col("doc_id").as("id"), col("bm25")), "bm25", "id", 50)
       vrank.unionAll(trank)
         .groupBy(col("id"))
         .agg(sum(round(lit(1.0) / (lit(60) + col("rnk")), 9).cast("decimal(28,9)")).as("sr"),
@@ -516,40 +489,17 @@ object SelectOps {
       // Both rankings reuse ONE cached tf relation (the inverted index);
       // relevance grades come from the same broadcast query-term join.
       // Each top-10 cut is TakeOrdered; ranks within the 10-row cuts are
-      // broadcast inequality self-joins (ir10's rankTop50 shape at k=10).
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val tf = tok.groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val dfr = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = dfr.orderBy(col("df").desc, col("w")).limit(3)
+      // broadcast inequality self-joins (Bm25.rankTop, as in ir10).
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tf), 3)
       val rel = tf.join(broadcast(qterms.select(col("w"))), Seq("w"))
         .groupBy(col("doc_id")).agg(countDistinct(col("w")).as("rel"))
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val bm25 = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
-      def rankTop(scored: DataFrame, score: String, k: Int): DataFrame = {
-        val top = scored.orderBy(col(score).desc, col("doc_id")).limit(k)
-        val ahead = top.as("b")
-          .select(col(s"b.$score").as("bs"), col("b.doc_id").as("bid"))
-        top.as("a").join(broadcast(ahead),
-            col("bs") > col(score) ||
-              (col("bs") === col(score) && col("bid") < col("doc_id")), "left")
-          .groupBy(col("doc_id"))
-          .agg((lit(1) + count(col("bid"))).cast("int").as("rnk"))
-      }
-      val actual = rankTop(bm25, "bm25", 10)
-      val ideal = rankTop(rel.select(col("doc_id"), col("rel").cast("double").as("relscore")),
-        "relscore", 10)
+      val bm25 = Bm25.docScores(Bm25.contributions(tf, qterms, dl), "bm25")
+      val actual = Bm25.rankTop(bm25, "bm25", "doc_id", 10)
+      val ideal = Bm25.rankTop(
+        rel.select(col("doc_id"), col("rel").cast("double").as("relscore")),
+        "relscore", "doc_id", 10)
       val dcgTerm = (c: Column, r: Column) =>
         round((pow(lit(2.0), c) - 1) / log2(r + 1), 9).cast("decimal(28,9)")
       val dcg = actual.join(rel, Seq("doc_id"), "left")
@@ -615,22 +565,11 @@ object SelectOps {
                COALESCE(round(1.0 / r.first_rank, 6), 0.0) AS rr, m.mrr
         FROM ranked r CROSS JOIN mrr m
       """)) { (s, dir) =>
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val tf = tok.groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val dfr = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val q5 = dfr.orderBy(col("df").desc, col("w")).limit(5)
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val scored = tf.join(broadcast(q5), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("w"), col("doc_id"), col("tf"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("sc"))
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
+      val q5 = Bm25.topTerms(Bm25.docFreqs(tf), 5)
+      val scored = Bm25.contributions(tf, q5, dl,
+          Seq(col("w"), col("doc_id"), col("tf")), "sc")
         .cache()
       val best = scored.filter(col("tf") >= 2)
         .groupBy(col("w")).agg(max(col("sc")).as("bs"))
@@ -714,24 +653,10 @@ object SelectOps {
                round((SELECT count(*) FROM parents p JOIN doc_top d ON p.doc_id = d.doc_id)
                      / CAST((SELECT count(*) FROM doc_top) AS DOUBLE), 6) AS chunk_recall
       """)) { (s, dir) =>
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val tf = tok.groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val n = dl.agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      val dfr = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val qterms = dfr.orderBy(col("df").desc, col("w")).limit(3)
-      val idf: Column = log((col("n").cast("double") - col("df") + 0.5) /
-        (col("df") + 0.5) + 1)
-      val docTop = tf.join(broadcast(qterms), Seq("w"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"),
-          round(idf * (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 9)
-            .cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("bm25"))
+      val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
+      val dl = Bm25.docLengths(tf)
+      val qterms = Bm25.topTerms(Bm25.docFreqs(tf), 3)
+      val docTop = Bm25.docScores(Bm25.contributions(tf, qterms, dl), "bm25")
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
         .select(col("doc_id"))
       val chunkWords = t(s, dir, "documents")
@@ -875,9 +800,8 @@ object SelectOps {
       val vecs = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
-      val dotN = (a: Column, b: Column) => graft.functions.NativeExpressions.dot_native(a, b)
       def plane(p: Int): Column =
-        dotN(col("v"), array(lshSigns(p).map(s => lit(s.toDouble)): _*))
+        dot_native(col("v"), array(lshSigns(p).map(s => lit(s.toDouble)): _*))
       val bucketed = vecs.select(col("label"),
         (when(plane(0) >= 0, 4).otherwise(0) +
           when(plane(1) >= 0, 2).otherwise(0) +
@@ -928,18 +852,17 @@ object SelectOps {
       // e5's broadcast-query brute shape + the label-exclusion predicate;
       // at real corpus scale the scoring side swaps for e5's LSH/IVF
       // candidates — the exclusion predicate is the part this op adds.
-      val dotN = (a: Column, b: Column) => graft.functions.NativeExpressions.dot_native(a, b)
       val vecs = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", sqrt(dotN(col("v"), col("v"))))
+        .withColumn("norm", sqrt(dot_native(col("v"), col("v"))))
       val q = vecs.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("label").as("q_label"),
           col("v").as("qv"), col("norm").as("qn"))
       val scored = vecs.crossJoin(broadcast(q))
         .filter(col("label") =!= col("q_label"))
         .select(col("q_id"), col("vec_id").as("neg_id"),
-          round(dotN(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
       val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("neg_id"))
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
         .select(col("q_id"), col("neg_id"), col("cos"))
@@ -1700,18 +1623,17 @@ object SelectOps {
       // scoring here (query slice broadcast); at corpus scale the
       // candidate side swaps for e5's LSH buckets — the margin arithmetic
       // is what this op adds.
-      val dotN = (a: Column, b: Column) => graft.functions.NativeExpressions.dot_native(a, b)
       val vecs = t(s, dir, "embeddings")
         .join(t(s, dir, "documents").select(col("doc_id").as("vec_id"), col("lang")),
           Seq("vec_id"))
         .select(col("vec_id"), col("lang"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", sqrt(dotN(col("v"), col("v"))))
+        .withColumn("norm", sqrt(dot_native(col("v"), col("v"))))
       val q = vecs.filter(col("lang") === "en" && col("vec_id") % 20 === 0)
         .select(col("vec_id").as("src_id"), col("v").as("qv"), col("norm").as("qn"))
       val cand = vecs.filter(col("lang") =!= "en").crossJoin(broadcast(q))
         .select(col("src_id"), col("vec_id").as("tgt_id"),
-          round(dotN(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
+          round(dot_native(col("qv"), col("v")) / (col("qn") * col("norm")), 6).as("cos"))
       val wr = Window.partitionBy("src_id").orderBy(col("cos").desc, col("tgt_id"))
       val knn = cand.withColumn("rn", row_number().over(wr)).filter(col("rn") <= 4).cache()
       // mean over the neighbors ACTUALLY retrieved (count, not a hard 4):

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Time-series statistics over the events stream — the monitoring surface a
   * production pipeline layers on its own telemetry (the reference keeps
@@ -21,9 +21,6 @@ import graft.core.Tables
   * DuckDB forms, and every emitted double is round(6).
   */
 object SeriesOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** (1-alpha)^k for alpha=0.3, k=0..9 — written as full decimal literals so
     * the Spark and DuckDB parsers produce bit-identical doubles. */

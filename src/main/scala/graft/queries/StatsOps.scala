@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Distribution-level statistical tests and corpus diagnostics a
   * training-data pipeline runs before trusting a source: rank tests
@@ -29,9 +29,6 @@ import graft.core.Tables
   * float summation ORDER differ across engines).
   */
 object StatsOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** Strict-lower-bucket offsets: for each bucket, the sum of `valueCol`
     * over all lower buckets (w18's year-offset shape on an arbitrary

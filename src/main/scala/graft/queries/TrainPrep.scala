@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Global training-stream packing — the complement of dd26's per-shard
   * packing (ScaleOps.scala:210). dd26 packs each language independently
@@ -18,9 +17,6 @@ import graft.core.Tables
   * zipWithIndex shape as dd35's ordinals.
   */
 object TrainPrep {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
+import graft.functions.NativeExpressions.dot_native
 
 /** Data-trust operators: the audit moves a training-data platform runs
   * AFTER curation decides what to keep — per-example valuation (exact
@@ -25,12 +26,6 @@ import graft.core.Tables
   * doesn't, and the driver hashes the repr.
   */
 object TrustOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.NativeExpressions.dot_native(a, b)
 
   /** Exact KNN-Shapley data valuation (Jia et al., VLDB'19, Theorem 1):
     * for each test point, sort the train set by distance ascending and
@@ -56,7 +51,7 @@ object TrustOps {
                  panelCap: Long = 1000000L): DataFrame = {
     val vecs = emb.select(col("vec_id"), col("label"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("aa", dot(col("v"), col("v")))
+      .withColumn("aa", dot_native(col("v"), col("v")))
     val isPanel = col("vec_id") % panelMod === 0 && col("vec_id") < panelCap
     val q = vecs.filter(isPanel)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -67,7 +62,7 @@ object TrustOps {
     // classic range-partitionable top-to-bottom order
     val scored = tr.crossJoin(broadcast(q))
       .select(col("q_id"), col("vec_id"), col("label"),
-        (col("aa") - lit(2) * dot(col("v"), col("qv")) + col("qq")).as("d2"),
+        (col("aa") - lit(2) * dot_native(col("v"), col("qv")) + col("qq")).as("d2"),
         when(col("label") === col("q_label"), 1).otherwise(0).as("ind"))
     val wo = Window.partitionBy("q_id").orderBy(col("d2"), col("vec_id"))
     val wp = Window.partitionBy("q_id")

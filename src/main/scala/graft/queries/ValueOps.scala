@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.Tables.{apply => t}
 
 /** Data-valuation and selection operators: the four curation moves that
   * decide WHICH rows a training corpus keeps, beyond near-dup removal —
@@ -21,9 +21,6 @@ import graft.core.Tables
   * output doubles round(6).
   */
 object ValueOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
 
   /** 32-bit shingle hash shared by winnowing: first 8 md5 hex chars. */
   private def h32(c: Column): Column =
