@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
@@ -78,12 +79,21 @@ object Explain {
         Sessions.release(spark)
       }
     } else {
-      picked.foreach { q =>
-        println(s"===== ${q.name} =====")
-        println(q.run(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+      plans(spark, sfDir, picked).foreach { case (name, plan) =>
+        println(s"===== $name =====")
+        println(plan)
       }
     }
     spark.stop()
   }
+
+  /** The formatted physical plan of each query, in order, rendered one
+    * at a time. The caches a query builds are released once its plan is
+    * rendered, so a plan does not depend on the queries named before it. */
+  def plans(spark: SparkSession, sfDir: String,
+      queries: Seq[QueryDef]): Iterator[(String, String)] =
+    queries.iterator.map { q =>
+      try q.name -> q.run(spark, sfDir).queryExecution.explainString(FormattedMode)
+      finally Sessions.release(spark)
+    }
 }
