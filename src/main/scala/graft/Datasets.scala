@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Layout, Sessions, Tables}
+import graft.search.Text
 
 /** Derived inputs for `Bench`: a testdata directory scaled by key-offset
   * replicas, or re-laid-out month-partitioned. Neither changes a query;
@@ -70,7 +71,7 @@ object Datasets {
         // replicas−1 exact clones, and the dedup family's candidate sets
         // would grow quadratically by data pathology, not engine work.
         d = d.withColumn("text",
-            array_join(transform(split(col("text"), " "),
+            array_join(transform(Text.tokens,
               w => concat(lit(s"r$r"), w)), " "))
           .withColumn("n_chars", length(col("text")))
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Corpus-association and graph-structure analytics: collocation mining
   * (PMI), triangle counting over a co-occurrence graph, and
@@ -39,13 +40,8 @@ object Association {
         WHERE p.c >= 3
         ORDER BY pmi DESC, p.a, p.b LIMIT 20
       """)) { (s, dir) =>
-      val docs = t(s, dir, "documents")
-        .select(split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 2)
-      val bigrams = docs.select(explode(transform(
-        sequence(lit(0), size(col("arr")) - 2),
-        i => struct(element_at(col("arr"), i + 1).as("a"),
-          element_at(col("arr"), i + 2).as("b")))).as("bg"))
+      val docs = Text.tokenArrays(t(s, dir, "documents"), Nil, 2)
+      val bigrams = docs.select(explode(Text.bigrams(col("arr"), "a", "b")).as("bg"))
         .select(col("bg.a").as("a"), col("bg.b").as("b"))
       // cache: pairs feeds four consumers (filter, both marginals, total);
       // without it each one re-runs the corpus-wide bigram explode. The
@@ -160,8 +156,7 @@ object Association {
         FROM terms GROUP BY lang
       """)) { (s, dir) =>
       val d = t(s, dir, "documents")
-        .select(col("lang"),
-          least(floor(size(split(col("text"), " ")) / 10), lit(9)).as("bucket"))
+        .select(col("lang"), least(floor(size(Text.tokens) / 10), lit(9)).as("bucket"))
       // cache: the histogram feeds four consumers (both marginals, the
       // total, the grid join) and is segment x bucket-bounded — without it
       // each consumer re-scans the corpus

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Content-defined chunking (Muthitacharoen/Chen/Mazières SOSP'01 — the
   * LBFS primitive behind every dedup store: restic, borg, Venti): chunk
@@ -27,7 +28,7 @@ object ChunkOps {
     */
   def cdcChunks(docs: DataFrame, divisor: Int): DataFrame = {
     val tok = docs
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
+      .select(col("doc_id"), posexplode(Text.tokens).as(Seq("pos", "w")))
       .withColumn("b",
         when(conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long")
           % divisor === 0, 1).otherwise(0))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Round-11 corpus-preparation batch: the training-data operators a
   * 100 TB pipeline runs between ingestion and tokenization that the
@@ -359,9 +360,9 @@ object CorpusOps {
       // the cache otherwise pins the union's 3 scan partitions, and every
       // consumer of the cached relation inherits one hot task (profiled
       // six 3-task stages at max 0.7-1.5 s vs median 0.05-0.27 s)
-      val docsArr = DocPipeline.shingleArr(
+      val docsArr = Text.shingleArr(
         graft.core.Fanout.bySize(s, both, dir, "documents")).cache()
-      val sh = docsArr.select(col("doc_id"), explode(col("shArr")).as("sh"))
+      val sh = Text.shingles(docsArr)
       val bands = graft.resolve.LshBands.bandsOf(docsArr).cache()
       val deltaBands = bands.join(deltaDocs.select(col("doc_id")), Seq("doc_id"))
       val standingBands = bands.join(standingIds, Seq("doc_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
-import graft.search.IndexMaintain
+import graft.search.{Bm25, IndexMaintain, Text}
 
 /** Release-gate curation operators: the audits and joins that sit between
   * "the corpus is deduped" and "the corpus ships" — an EXACT set-similarity
@@ -59,11 +59,8 @@ object CurateOps {
       // is additionally ScalaCheck'd against its naive form on random
       // corpora across thresholds.
       graft.resolve.SetSimJoin.exact(
-        t(s, dir, "documents")
-          .select(col("doc_id").as("id"), split(col("text"), " ").as("arr"))
-          .filter(size(col("arr")) >= 3)
-          .select(col("id"), array_distinct(
-            graft.functions.NativeExpressions.ngrams_native(col("arr"), 3)).as("toks")),
+        Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id").as("id")), 3)
+          .select(col("id"), Text.shingleSet(col("arr")).as("toks")),
         tNum = 3, tDen = 4)
     },
 
@@ -176,23 +173,13 @@ object CurateOps {
           UNION ALL SELECT 'any_rule', anyv, docs FROM agg
         )
       """)) { (s, dir) =>
-      // Ratio thresholds in integer cross-multiplied form (10*aw >= 7*nw,
-      // not aw/nw >= 0.7): a doc sitting exactly on the boundary must fall
-      // on the same side in both engines. Mean word length folds the same
-      // way: 2 <= nc/nw <= 12 becomes nc BETWEEN 2*nw AND 12*nw.
-      val base = t(s, dir, "documents").select(
-        size(split(col("text"), " ")).cast("long").as("nw"),
-        length(regexp_replace(col("text"), " ", "")).cast("long").as("nc"),
-        size(filter(split(col("text"), " "),
-          w => w.rlike("[A-Za-z]"))).cast("long").as("aw"),
-        size(filter(split(col("text"), " "),
-          w => w.rlike("^[0-9]+$"))).cast("long").as("dw"))
+      // the signals and rules are search/Text's, in integer
+      // cross-multiplied form so boundary docs agree across engines
+      val base = t(s, dir, "documents").select(Text.gopherSignals: _*)
       val flags = base.select(
-        when(col("nw").between(20, 80), 0L).otherwise(1L).as("v_wc"),
-        when(col("nc") >= col("nw") * 4 && col("nc") <= col("nw") * 5, 0L)
-          .otherwise(1L).as("v_mwl"),
-        when(col("aw") * 10 >= col("nw") * 7, 0L).otherwise(1L).as("v_alpha"),
-        when(col("dw") * 10 <= col("nw") * 3, 0L).otherwise(1L).as("v_num"))
+        Text.gopherRules.zip(Seq("v_wc", "v_mwl", "v_alpha", "v_num")).map {
+          case (rule, v) => when(rule, 0L).otherwise(1L).as(v)
+        }: _*)
       val agg = flags.agg(
         count(lit(1)).as("docs"),
         sum(col("v_wc")).as("wc"), sum(col("v_mwl")).as("mwl"),
@@ -238,7 +225,7 @@ object CurateOps {
       // float log2 at an exact power of two can land on 2.9999 and
       // misbucket.
       val d = t(s, dir, "documents")
-        .select(size(split(col("text"), " ")).cast("long").as("n"))
+        .select(size(Text.tokens).cast("long").as("n"))
       val b = d.select(col("n"),
         when(col("n") <= 1, lit(1L))
           .otherwise(expr("shiftleft(1, length(bin(n - 1)))"))
@@ -282,20 +269,15 @@ object CurateOps {
       // the LEFT join keeps zero-tf docs scoreable (the whole point of
       // smoothing; an inner join would silently drop them).
       val tf = IndexMaintain.postings(t(s, dir, "documents")).cache()
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      val dl = Bm25.docLengths(tf)
       val tot = dl.agg(sum(col("dl")).as("t"))
       val dfr = tf.groupBy(col("w"))
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      val qterms = dfr.orderBy(col("df").desc, col("w")).limit(3)
-        .select(col("w"), col("cf"))
+      val qterms = Bm25.topTerms(dfr, 3).select(col("w"), col("cf"))
       val contrib = dl.crossJoin(broadcast(qterms)).crossJoin(broadcast(tot))
         .join(tf, Seq("doc_id", "w"), "left")
-        .select(col("doc_id"),
-          round(log((coalesce(col("tf"), lit(0L)) +
-            lit(100) * (col("cf") / col("t").cast("double"))) /
-            (col("dl") + lit(100))), 9).cast("decimal(28,9)").as("c"))
-      contrib.groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("score"))
+        .select(col("doc_id"), Text.dirichlet(100, col("t")).as("c"))
+      Bm25.docScores(contrib, "score")
         .orderBy(col("score").desc, col("doc_id")).limit(10)
     },
 
@@ -352,7 +334,7 @@ object CurateOps {
       // engines; empty-range guards are explicit because Spark's
       // sequence(1, 0) is the DESCENDING [1, 0] while DuckDB's
       // generate_series(1, 0) is empty (the dd70 lesson)
-      val arr = split(col("text"), " ")
+      val arr = Text.tokens
       // size-gated fan-out: this battery is deliberately exchange-free, so
       // ALL of its O(distinct·len) per-row array work ran inside the
       // 1-task documents scan (profiled: a single-task 1.4 s save stage =
@@ -431,19 +413,10 @@ object CurateOps {
         FROM f JOIN dup d ON f.source = d.source
         GROUP BY f.source
       """)) { (s, dir) =>
-      val base = t(s, dir, "documents").select(col("source"), col("lang"),
-        md5(col("text")).as("h"),
-        size(split(col("text"), " ")).cast("long").as("nw"),
-        length(regexp_replace(col("text"), " ", "")).cast("long").as("nc"),
-        size(filter(split(col("text"), " "),
-          w => w.rlike("[A-Za-z]"))).cast("long").as("aw"),
-        size(filter(split(col("text"), " "),
-          w => w.rlike("^[0-9]+$"))).cast("long").as("dw"))
+      val base = t(s, dir, "documents").select(
+        Seq(col("source"), col("lang"), md5(col("text")).as("h")) ++ Text.gopherSignals: _*)
       val f = base.select(col("source"), col("lang"), col("h"), col("nw"),
-        when(col("nw").between(20, 80) &&
-          col("nc") >= col("nw") * 4 && col("nc") <= col("nw") * 5 &&
-          col("aw") * 10 >= col("nw") * 7 && col("dw") * 10 <= col("nw") * 3, 1L)
-          .otherwise(0L).as("pass")).cache()
+        when(Text.gopherPass, 1L).otherwise(0L).as("pass")).cache()
       val dup = f.groupBy(col("source"), col("h")).agg(count(lit(1)).as("c"))
         .groupBy(col("source")).agg(sum(col("c") - 1).cast("long").as("n_dup"))
       f.join(dup, Seq("source"))
@@ -486,11 +459,8 @@ object CurateOps {
         WHERE 4 * c >= 3 * na.n
       """)) { (s, dir) =>
       graft.resolve.SetSimJoin.containment(
-        t(s, dir, "documents")
-          .select(col("doc_id").as("id"), split(col("text"), " ").as("arr"))
-          .filter(size(col("arr")) >= 3)
-          .select(col("id"), array_distinct(
-            graft.functions.NativeExpressions.ngrams_native(col("arr"), 3)).as("toks")),
+        Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id").as("id")), 3)
+          .select(col("id"), Text.shingleSet(col("arr")).as("toks")),
         tNum = 3, tDen = 4)
     },
 
@@ -543,7 +513,7 @@ object CurateOps {
           concat(col("t2"), lit("."))).otherwise(col("t2")))
       val f = planted.select(col("source"),
         when(col("t3").endsWith("."), 0L).otherwise(1L).as("v_punct"),
-        when(size(split(col("t3"), " ")) >= 40, 0L).otherwise(1L).as("v_short"),
+        when(size(Text.tokens(col("t3"))) >= 40, 0L).otherwise(1L).as("v_short"),
         when(col("t3").contains("{"), 1L).otherwise(0L).as("v_brace"),
         when(col("t3").contains("lorem ipsum"), 1L).otherwise(0L).as("v_lorem"))
       val anyV = col("v_punct") + col("v_short") + col("v_brace") + col("v_lorem")
@@ -582,9 +552,9 @@ object CurateOps {
       // no explode, no shuffle of token rows; the only exchange is the
       // (source, lang) groupBy of per-doc integer triples.
       val d = t(s, dir, "documents").select(col("source"), col("lang"),
-        size(split(col("text"), " ")).cast("long").as("nw"),
+        size(Text.tokens).cast("long").as("nw"),
         length(regexp_replace(col("text"), " ", "")).cast("long").as("nc"),
-        aggregate(transform(split(col("text"), " "),
+        aggregate(transform(Text.tokens,
           w => shiftright(length(w) + lit(3), 2).cast("long")),
           lit(0L), (acc, x) => acc + x).as("nsw"))
       d.groupBy(col("source"), col("lang")).agg(
@@ -634,8 +604,8 @@ object CurateOps {
       val lab = t(s, dir, "documents").select(
         when(col("n_chars") < 150, "S").when(col("n_chars") < 300, "M")
           .otherwise("L").as("ra"),
-        when(size(split(col("text"), " ")) < 30, "S")
-          .when(size(split(col("text"), " ")) < 60, "M")
+        when(size(Text.tokens) < 30, "S")
+          .when(size(Text.tokens) < 60, "M")
           .otherwise("L").as("rb"))
       val cells = lab.groupBy(col("ra"), col("rb"))
         .agg(count(lit(1)).as("c")).cache()

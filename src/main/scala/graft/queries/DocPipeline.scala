@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Training-data document pipeline: deduplication (exact, MinHash+LSH,
   * SimHash signatures, n-gram Jaccard) and text analysis (quality
@@ -39,10 +40,7 @@ object DocPipeline {
     // expansion is the pipeline's dominant per-row work and otherwise
     // runs on however few tasks the documents row groups allow
     // (size-gated — a no-op at scale, where the scan parallelizes itself)
-    graft.core.Fanout.bySize(s,
-      corpus(s, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 8),
+    graft.core.Fanout.bySize(s, Text.tokenArrays(corpus(s, dir), Seq(col("doc_id")), 8),
       dir, "documents")
 
   /** dd31's positioned 8-gram shingle relation under the round-11
@@ -75,24 +73,9 @@ object DocPipeline {
       FROM documents WHERE doc_id % 5 = 0
     )"""
 
-  /** Per-doc DISTINCT word-3-gram shingle ARRAY. Built by array-index
-    * transform rather than a lead() window, and deduped with
-    * array_distinct rather than a global .distinct(): both stay narrow —
-    * zero exchanges — where the window/distinct formulations each shuffle
-    * every (doc, shingle) row. (The DuckDB oracle keeps its
-    * window+DISTINCT formulation; the shingle *sets* are identical.) */
-  private[graft] def shingleArr(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("arr"))
-      .filter(size(col("arr")) >= 3)
-      .select(col("doc_id"),
-        array_distinct(graft.functions.NativeExpressions.ngrams_native(col("arr"), 3))
-          .as("shArr"))
-
-  /** Exploded (doc_id, shingle) rows — within-doc distinct, so identical
-    * to a global distinct (doc_id is part of the key). */
-  private[graft] def shingles(docs: DataFrame): DataFrame =
-    shingleArr(docs).select(col("doc_id"), explode(col("shArr")).as("sh"))
-
+  /** The oracle's shingle relation: a lead() window and DISTINCT, where
+    * the engine builds `Text.shingleArr` by array index; the shingle
+    * *sets* are identical. */
   private val shinglesSql = """
     tok AS (
       SELECT doc_id, generate_subscripts(arr, 1) AS pos, unnest(arr) AS w
@@ -123,9 +106,7 @@ object DocPipeline {
                doc_id <> MIN(doc_id) OVER (PARTITION BY dedup_key) AS is_duplicate
         FROM keyed
       """)) { (s, dir) =>
-      val keyed = t(s, dir, "documents").select(col("doc_id"),
-        md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
-          .as("dedup_key"))
+      val keyed = t(s, dir, "documents").select(col("doc_id"), Text.bagKey.as("dedup_key"))
       val w = Window.partitionBy("dedup_key")
       keyed
         .withColumn("group_size", count(lit(1)).over(w))
@@ -190,9 +171,9 @@ object DocPipeline {
       // fanned out before the shingle build (size-gated no-op at scale):
       // the cache otherwise pins the scan's 1-2 partitions, serializing
       // every downstream consumer of the cached relation
-      val docsArr = shingleArr(
+      val docsArr = Text.shingleArr(
         graft.core.Fanout.bySize(s, corpus(s, dir), dir, "documents")).cache()
-      val sh = docsArr.select(col("doc_id"), explode(col("shArr")).as("sh"))
+      val sh = Text.shingles(docsArr)
       // two projections: CollapseProject keeps the non-cheap signature
       // expression single-evaluation instead of inlining it 8×
       val mh = docsArr.select(col("doc_id"),
@@ -259,8 +240,7 @@ object DocPipeline {
       // and the count-per-doc groupBy were two shuffles for what
       // array_distinct + size compute map-side (same rewrite as dd2)
       val docsTok = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          array_distinct(split(col("text"), " ")).as("toks"))
+        .select(col("doc_id"), col("lang"), array_distinct(Text.tokens).as("toks"))
       val tokd = docsTok.select(col("doc_id"), col("lang"),
         explode(col("toks")).as("w"))
       val n = docsTok.select(col("doc_id"), size(col("toks")).cast("long").as("n"))
@@ -307,8 +287,7 @@ object DocPipeline {
         SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM votes
         """
       }) { (s, dir) =>
-      val tokd = corpus(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val tokd = Text.tokenRows(corpus(s, dir), Seq(col("doc_id")))
         .distinct()
       val hashed = tokd.select(col("doc_id"),
         conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long").as("h"))
@@ -349,7 +328,7 @@ object DocPipeline {
                     ELSE 'poor' END AS grade
         FROM scored
       """)) { (s, dir) =>
-      val toks = split(col("text"), " ")
+      val toks = Text.tokens
       val stats = t(s, dir, "documents").select(
         col("doc_id"), col("lang"), col("n_chars"),
         size(toks).as("n_tokens"),
@@ -382,10 +361,10 @@ object DocPipeline {
       """)) { (s, dir) =>
       t(s, dir, "documents").groupBy(col("lang")).agg(
         count(lit(1)).as("docs"),
-        sum(size(split(col("text"), " "))).as("ws_tokens"),
+        sum(size(Text.tokens)).as("ws_tokens"),
         sum(size(regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0)))).as("re_tokens"),
         (sum(col("n_chars")).cast("double") /
-          sum(size(split(col("text"), " ")))).as("chars_per_token"))
+          sum(size(Text.tokens))).as("chars_per_token"))
     },
 
     // ---- language-ID via per-language token profiles ----------------------
@@ -423,8 +402,7 @@ object DocPipeline {
       // within-doc distinct via array_distinct (narrow), not a global
       // distinct shuffle — same rewrite as dd2/dd3
       val tokd = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          explode(array_distinct(split(col("text"), " "))).as("w"))
+        .select(col("doc_id"), col("lang"), explode(array_distinct(Text.tokens)).as("w"))
       val freq = tokd.groupBy(col("lang"), col("w")).agg(count(lit(1)).as("n"))
       val wProfile = Window.partitionBy("lang").orderBy(col("n").desc, col("w"))
       val profile = freq.withColumn("rn", row_number().over(wProfile))
@@ -469,8 +447,7 @@ object DocPipeline {
         FROM clusters GROUP BY cluster
         HAVING COUNT(*) > 1
       """)) { (s, dir) =>
-      val keyed = corpus(s, dir).select(col("doc_id"),
-        md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " ")).as("k"))
+      val keyed = corpus(s, dir).select(col("doc_id"), Text.bagKey.as("k"))
       // star edges, not all-pairs: each member links to the group minimum.
       // Same connected components, but a g-sized duplicate group emits g-1
       // edges instead of g(g-1)/2 — at 100 TB a 100k-duplicate mega-group
@@ -514,7 +491,7 @@ object DocPipeline {
         ) WHERE rn <= 3
       """)) { (s, dir) =>
       val docsF = t(s, dir, "documents").filter(col("doc_id") % 3 === 0)
-      val tok = docsF.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val tok = Text.tokenRows(docsF, Seq(col("doc_id")))
       val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
       // df: COUNT(DISTINCT doc_id) per term ≡ plain count over the
       // per-doc-deduped explode — array_distinct is narrow, so the
@@ -522,7 +499,7 @@ object DocPipeline {
       // n likewise: every doc splits to ≥1 token, so the oracle's
       // COUNT(DISTINCT doc_id) over tokens is just the doc count.
       val df = docsF
-        .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
+        .select(col("doc_id"), explode(array_distinct(Text.tokens)).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("df"))
       val n = docsF.agg(count(lit(1)).as("n"))
       val scored = tf.join(df, Seq("w")).crossJoin(broadcast(n))
@@ -620,7 +597,7 @@ object DocPipeline {
                md5(string_agg(h, ',' ORDER BY h)) AS fingerprint
         FROM kept GROUP BY doc_id
       """)) { (s, dir) =>
-      shingles(corpus(s, dir))
+      Text.shingles(Text.shingleArr(corpus(s, dir)))
         .select(col("doc_id"), md5(col("sh")).as("h"))
         .filter(substring(col("h"), 1, 1).isin("0", "1"))
         .groupBy(col("doc_id"))
@@ -670,10 +647,8 @@ object DocPipeline {
         GROUP BY tg.doc_id
       """)) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      def grams(words: Column): Column =
-        graft.functions.NativeExpressions.ngrams_native(words, 8)
       val bench = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("b_id"), split(col("text"), " ").as("w"))
+        .select(col("doc_id").as("b_id"), Text.tokens.as("w"))
       val planted = bench
         .crossJoin(broadcast(docs.agg(max(col("doc_id")).as("m"))))
         .select((col("b_id") + col("m") + 1).as("doc_id"),
@@ -684,10 +659,8 @@ object DocPipeline {
       // within-doc distinct via array_distinct (narrow) — the id is part
       // of both downstream join keys, so the global distincts were wasted
       // exchanges (same rewrite as dd2/dd3/dd7)
-      val bg = bench.select(col("b_id"),
-        explode(array_distinct(grams(col("w")))).as("gram"))
-      val tg = train.select(col("doc_id"),
-        explode(array_distinct(grams(split(col("text"), " ")))).as("gram"))
+      val bg = bench.select(col("b_id"), explode(Text.shingleSet(col("w"), 8)).as("gram"))
+      val tg = train.select(col("doc_id"), explode(Text.shingleSet(Text.tokens, 8)).as("gram"))
       tg.join(bg, "gram")
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("gram")).as("hits"),
@@ -721,9 +694,7 @@ object DocPipeline {
                  AS repetitive
         FROM counts GROUP BY doc_id
       """)) { (s, dir) =>
-      val words = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 2)
+      val words = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 2, "w")
       val grams = words.select(col("doc_id"),
         explode(graft.functions.NativeExpressions.ngrams_native(col("w"), 2))
           .as("bg"))
@@ -819,8 +790,7 @@ object DocPipeline {
         UNION ALL SELECT 7, stage, COUNT(*), CAST(SUM(doc_id) AS BIGINT) FROM spl GROUP BY stage
       """)) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val toks = docs.select(col("doc_id"), col("n_chars"),
-        split(col("text"), " ").as("w"))
+      val toks = docs.select(col("doc_id"), col("n_chars"), Text.tokens.as("w"))
       val quality = lit(0.5) * least(col("n_chars").cast("double") / 500, lit(1.0)) +
         lit(0.3) * (lit(1.0) -
           size(filter(col("w"), x => x.isin("a", "the"))).cast("double") / size(col("w"))) +
@@ -830,8 +800,7 @@ object DocPipeline {
       // three branch points so the funnel reads the corpus once, not once
       // per stage (the bench releases blocks between queries)
       val ded = q
-        .withColumn("mn", min(col("doc_id")).over(Window.partitionBy(
-          md5(array_join(array_sort(array_distinct(col("w"))), " ")))))
+        .withColumn("mn", min(col("doc_id")).over(Window.partitionBy(Text.bagKey(col("w")))))
         .filter(col("doc_id") === col("mn")).drop("mn").cache()
       val bgCounts = ded.filter(size(col("w")) >= 2)
         .select(col("doc_id"), explode(
@@ -848,8 +817,7 @@ object DocPipeline {
       // overlap with the holdout occurs, so the stage provably fires
       def grams4(df: DataFrame): DataFrame =
         df.filter(size(col("w")) >= 4)
-          .select(col("doc_id"), explode(array_distinct(
-            graft.functions.NativeExpressions.ngrams_native(col("w"), 4))).as("gram"))
+          .select(col("doc_id"), explode(Text.shingleSet(col("w"), 4)).as("gram"))
       val bench4 = grams4(toks.filter(col("doc_id") % 97 === 0)).select(col("gram")).distinct()
       val cont = grams4(hold).join(bench4, "gram").select(col("doc_id")).distinct()
       val clean = hold.join(cont, Seq("doc_id"), "left_anti")
@@ -967,7 +935,7 @@ object DocPipeline {
         GROUP BY p.doc_id
       """)) { (s, dir) =>
       val bp = "subscribe to our newsletter for daily updates and exclusive offers"
-      val arr = split(col("text"), " ")
+      val arr = Text.tokens
       val chunks = transform(
         sequence(lit(0), ((size(arr) - lit(1)) / lit(10)).cast("int")),
         i => array_join(slice(arr, i * 10 + 1, lit(10)), " "))
@@ -1078,7 +1046,7 @@ object DocPipeline {
                md5(array_to_string(words, ' ')) AS chunk_md5
         FROM chunks
       """)) { (s, dir) =>
-      val arr = split(col("text"), " ")
+      val arr = Text.tokens
       t(s, dir, "documents")
         .select(col("doc_id"),
           explode(transform(
@@ -1108,8 +1076,7 @@ object DocPipeline {
       // compiles to TakeOrderedAndProject: each partition keeps its own
       // top-20, the driver merges k×partitions rows — no global sort at
       // any corpus size
-      t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
+      Text.tokenRows(t(s, dir, "documents"), Nil)
         .groupBy(col("w")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("w"))
         .limit(20)
@@ -1381,8 +1348,7 @@ object DocPipeline {
       // sides + the per-doc size relation) each ran the ngram build as a
       // serial 2-task stage (profiled ~0.6 s × 2 + 0.25 s).
       val tok = dd31Tok(s, dir)
-      val shA = tok.select(col("doc_id"), array_distinct(
-        graft.functions.NativeExpressions.ngrams_native(col("arr"), 8)).as("shArr"))
+      val shA = tok.select(col("doc_id"), Text.shingleSet(col("arr"), 8).as("shArr"))
       val sh = shA.select(col("doc_id"), explode(col("shArr")).as("g"))
       val n = shA.select(col("doc_id"), size(col("shArr")).cast("long").as("n"))
       val pairs = sh.as("a").join(sh.as("b"),
@@ -1447,12 +1413,8 @@ object DocPipeline {
       // the shingle key, so the shape is one repartition wide. Novelty
       // ordering is deterministic (min doc id), matching how snapshot
       // ingestion assigns priority to the earliest copy.
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 3)
-      val sh = tok.select(col("doc_id"),
-        explode(array_distinct(
-          graft.functions.NativeExpressions.ngrams_native(col("arr"), 3))).as("g"))
+      val tok = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 3)
+      val sh = tok.select(col("doc_id"), explode(Text.shingleSet(col("arr"))).as("g"))
       val firstSeen = sh.groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
       sh.join(firstSeen, Seq("g"))
         .groupBy(col("doc_id"))
@@ -1517,8 +1479,7 @@ object DocPipeline {
       // 1-row aggregates — nothing is collected until the final scalar
       // row, so the same harness evaluates a detector over a 100 TB
       // corpus unchanged.
-      val tokd = corpus(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val tokd = Text.tokenRows(corpus(s, dir), Seq(col("doc_id")))
         .distinct()
       val hashed = tokd.select(col("doc_id"),
         conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long").as("h"))
@@ -1714,8 +1675,7 @@ object DocPipeline {
       // tiebreak — and the savings accounting rides the same groupBy.
       // Nothing here is pairwise; cluster sizes bound the window groups.
       val docs = corpus(s, dir)
-      val keyed = docs.select(col("doc_id"),
-        md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " ")).as("k"))
+      val keyed = docs.select(col("doc_id"), Text.bagKey.as("k"))
       val wk = Window.partitionBy("k")
       val bagEdges = keyed
         .withColumn("root", min(col("doc_id")).over(wk))
@@ -1766,11 +1726,11 @@ object DocPipeline {
         FROM per_doc GROUP BY lang
       """)) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val vocab = docs.select(explode(split(col("text"), " ")).as("w"))
+      val vocab = Text.tokenRows(docs, Nil)
         .groupBy(col("w")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("w")).limit(10)
         .agg(collect_list(col("w")).as("vocab"))
-      docs.select(col("lang"), split(col("text"), " ").as("toks"))
+      docs.select(col("lang"), Text.tokens.as("toks"))
         .crossJoin(broadcast(vocab))
         .select(col("lang"), size(col("toks")).as("n_tokens"),
           size(filter(col("toks"),
@@ -1800,8 +1760,7 @@ object DocPipeline {
                round(regr_slope(ln(CAST(n AS DOUBLE)), ln(CAST(rnk AS DOUBLE))), 6) AS zipf_slope
         FROM ranked WHERE rnk <= 100 GROUP BY source
       """)) { (s, dir) =>
-      val freq = t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
+      val freq = Text.tokenRows(t(s, dir, "documents"), Seq(col("source")))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("n"))
       val wr = Window.partitionBy("source").orderBy(col("n").desc, col("w"))
       freq.withColumn("rnk", row_number().over(wr)).filter(col("rnk") <= 100)
@@ -1861,15 +1820,11 @@ object DocPipeline {
         GROUP BY 1, 2
       """)) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      def grams(words: Column): Column =
-        graft.functions.NativeExpressions.ngrams_native(words, 8)
       val mx = docs.agg(max(col("doc_id")).as("m"))
       val bench = docs.filter(col("doc_id") % 97 === 0)
-        .select(lit("evalA").as("eval_set"), col("doc_id").as("b_id"),
-          split(col("text"), " ").as("w"))
+        .select(lit("evalA").as("eval_set"), col("doc_id").as("b_id"), Text.tokens.as("w"))
         .unionByName(docs.filter(col("doc_id") % 89 === 0)
-          .select(lit("evalB").as("eval_set"), col("doc_id").as("b_id"),
-            split(col("text"), " ").as("w")))
+          .select(lit("evalB").as("eval_set"), col("doc_id").as("b_id"), Text.tokens.as("w")))
       // planted excerpt ids: evalA lands in (m, 2m+1], evalB in
       // (2m+1, 3m+2] — disjoint from the originals and from each other
       val planted = bench.crossJoin(broadcast(mx))
@@ -1883,10 +1838,9 @@ object DocPipeline {
       // eval-side grams: within-doc distinct narrow, then a distinct over
       // (eval_set, gram) — benchmark-bounded, stays tiny at any SF
       val bg = bench
-        .select(col("eval_set"), explode(array_distinct(grams(col("w")))).as("gram"))
+        .select(col("eval_set"), explode(Text.shingleSet(col("w"), 8)).as("gram"))
         .distinct()
-      val tg = train.select(col("doc_id"),
-        explode(array_distinct(grams(split(col("text"), " ")))).as("gram"))
+      val tg = train.select(col("doc_id"), explode(Text.shingleSet(Text.tokens, 8)).as("gram"))
       val hits = tg.join(bg, Seq("gram"))
         .groupBy((col("doc_id") % 4).cast("int").as("shard"),
           col("eval_set"), col("doc_id"))
@@ -1977,9 +1931,9 @@ object DocPipeline {
       // fanned out before the shingle build (size-gated no-op at scale):
       // the cache otherwise pins the scan's 1-2 partitions, serializing
       // every downstream consumer of the cached relation
-      val docsArr = shingleArr(
+      val docsArr = Text.shingleArr(
         graft.core.Fanout.bySize(s, corpus(s, dir), dir, "documents")).cache()
-      val sh = docsArr.select(col("doc_id"), explode(col("shArr")).as("sh"))
+      val sh = Text.shingles(docsArr)
       // native per-doc signature (see dd2): no exploded groupBy, value-
       // identical to the oracle's min-over-md5-prefix formulation
       val mh = docsArr.select(col("doc_id"),

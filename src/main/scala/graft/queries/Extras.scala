@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Remaining SURVEY.md §2 operators: name-part repair (T18), keep-one
   * cascade repair (W6), keyset pagination (W7), incremental discovery
@@ -221,7 +222,7 @@ object Extras {
         ) WHERE rn <= 2
       """)) { (s, dir) =>
       val tok = t(s, dir, "documents").filter(col("doc_id") % 4 === 0)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
+        .select(col("doc_id"), posexplode(Text.tokens).as(Seq("pos", "w")))
       val sections = tok
         .groupBy(col("doc_id"), floor(col("pos") / 20).as("section_id"))
         .agg(count(lit(1)).as("n_tokens"),

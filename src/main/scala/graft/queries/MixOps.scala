@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Corpus planning + survivorship operators: the "what do we actually
   * train on" layer that sits above the dedup/quality funnel (dd17) —
@@ -62,7 +63,7 @@ object MixOps {
       // scaling), and effective_tokens is the budget auditors read.
       val avail = t(s, dir, "documents")
         .groupBy(col("source"))
-        .agg(sum(size(split(col("text"), " ")).cast("long")).as("tok"))
+        .agg(sum(size(Text.tokens).cast("long")).as("tok"))
       val r = avail.withColumn("rs",
         round(sqrt(col("tok")), 6).cast("decimal(18,6)"))
       val tot = r.agg(
@@ -121,13 +122,11 @@ object MixOps {
       val docs = t(s, dir, "documents")
       val m = broadcast(docs.agg((max(col("doc_id")) + 1).as("m")))
       val dg = docs
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
+        .select(col("doc_id"), Text.tokens.as("w"))
         .crossJoin(m)
         .select(col("doc_id"),
           expr("CAST((doc_id * 10) div m AS INT)").as("bucket"),
-          explode(array_distinct(
-            graft.functions.NativeExpressions.ngrams_native(col("w"), 8)))
-            .as("gram"))
+          explode(Text.shingleSet(col("w"), 8)).as("gram"))
       val per = dg.groupBy(col("bucket")).agg(count(lit(1)).as("n_instances"))
       val fb = dg.groupBy(col("gram")).agg(min(col("bucket")).as("bucket"))
       val nw = fb.groupBy(col("bucket")).agg(count(lit(1)).as("new_grams"))
@@ -239,8 +238,7 @@ object MixOps {
       // cross-provider duplicates in the wild are near-dups: shared
       // openings with divergent tails.
       val fs = t(s, dir, "documents")
-        .select(array_join(slice(split(col("text"), " "), 1, 8), " ").as("fp"),
-          col("source"))
+        .select(Text.fingerprint.as("fp"), col("source"))
         .distinct()
         .cache()
       val cnt = fs.groupBy(col("source")).agg(count(lit(1)).as("nf"))
@@ -291,8 +289,7 @@ object MixOps {
       // sketches stack ~sqrt(3)·0.004·(nf_a+nf_b) of 1σ error on the
       // inclusion-exclusion difference; the 5% gate leaves >5σ.
       val fs = t(s, dir, "documents")
-        .select(array_join(slice(split(col("text"), " "), 1, 8), " ").as("fp"),
-          col("source"))
+        .select(Text.fingerprint.as("fp"), col("source"))
         .distinct()
         .cache()
       val sk = fs.groupBy(col("source"))
@@ -342,8 +339,7 @@ object MixOps {
       // word, count) is what makes tokenizer training tractable, and the
       // same shape iterates: apply the winning merge to the vocab column
       // and re-run.
-      val words = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
+      val words = Text.tokenRows(t(s, dir, "documents"), Nil)
         .filter(length(col("w")) >= 2)
         .groupBy(col("w")).agg(count(lit(1)).as("wc"))
       words
@@ -388,7 +384,7 @@ object MixOps {
       val b = conv(substring(md5(concat(lit("split#"), col("doc_id").cast("string"))),
         1, 2), 16, 10).cast("long")
       val f = t(s, dir, "documents")
-        .select(array_join(slice(split(col("text"), " "), 1, 8), " ").as("fp"),
+        .select(Text.fingerprint.as("fp"),
           when(b < 204, "train").when(b < 230, "val").otherwise("test").as("split"))
         .distinct()
         .cache()
@@ -443,8 +439,7 @@ object MixOps {
       val b = conv(substring(md5(concat(lit("split#"), col("fp"))), 1, 2), 16, 10)
         .cast("long")
       val assigned = t(s, dir, "documents")
-        .select(col("doc_id"),
-          array_join(slice(split(col("text"), " "), 1, 8), " ").as("fp"))
+        .select(col("doc_id"), Text.fingerprint.as("fp"))
         .withColumn("split",
           when(b < 204, "train").when(b < 230, "val").otherwise("test"))
         .cache()

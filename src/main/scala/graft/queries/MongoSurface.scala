@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{col, size, split}
 import graft.QueryDef
 import graft.core.Tables
 import graft.ql.{MongoQL, MongoRoute, Planner, QueryGuard}
+import graft.search.Text
 
 /** Driver-visible gates for the Mongo-style query surface (ql/MongoQL):
   * find filters, boolean/array/regex operators, a full aggregation
@@ -356,7 +357,7 @@ object MongoSurface {
         GROUP BY w
         HAVING count(*) >= 25
       """)) { (s, dir) =>
-      val docs = Tables(s, dir, "documents").withColumn("words", split(col("text"), " "))
+      val docs = Tables(s, dir, "documents").withColumn("words", Text.tokens)
       run(MongoQL.aggregate(docs,
         """[{"$match": {"lang": "en"}},
             {"$unwind": "$words"},

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.QueryDef
 import graft.core.Parity
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** JSON / array / map operators (SURVEY.md §2.7 N1–N8): the reference's
   * JSONB-heavy surface — array explode with ordinality, typed extraction
@@ -146,7 +147,7 @@ object Nested {
               FROM documents WHERE doc_id < 100)
       """)) { (s, dir) =>
       t(s, dir, "documents").filter(col("doc_id") < 100)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
+        .select(col("doc_id"), posexplode(Text.tokens).as(Seq("pos", "word")))
     },
 
     // ---- N2a: JSON scalar extraction + cast + nullif --------------------

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** OLAP-surface operators the reference's reporting layer leans on
   * (subtotal pyramids, cross-tabs, user sessionization) plus the
@@ -270,13 +271,9 @@ object OlapOps {
       // before 100 TB; V rides in as a broadcast scalar. Float parity:
       // per-bigram cost rounds to 9 dp then sums in DECIMAL (order-free),
       // mirroring the TF-IDF recipe in core/Parity.scala.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 2)
-      val bigrams = docs.select(col("doc_id"), explode(transform(
-        sequence(lit(0), size(col("arr")) - 2),
-        i => struct(element_at(col("arr"), i + 1).as("prev"),
-          element_at(col("arr"), i + 2).as("next")))).as("b"))
+      val docs = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 2)
+      val bigrams = docs.select(col("doc_id"),
+        explode(Text.bigrams(col("arr"), "prev", "next")).as("b"))
         .select(col("doc_id"), col("b.prev").as("prev"), col("b.next").as("next"))
       val pairCounts = bigrams.groupBy(col("prev"), col("next"))
         .agg(count(lit(1)).as("c"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Distribution-health probes: PSI drift between two time windows of the
   * order fact (the model-monitoring twin of dd43's corpus-level JS
@@ -101,7 +102,7 @@ object QualityProbes {
       // DuckDB's generate_series 1-based; the shift is absorbed by the
       // subtraction.
       val pos = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p", "w")))
+        .select(col("doc_id"), posexplode(Text.tokens).as(Seq("p", "w")))
       val w = Window.partitionBy("doc_id", "w").orderBy("p")
       val rl = pos
         .withColumn("island", col("p") - row_number().over(w))
@@ -223,9 +224,8 @@ object QualityProbes {
       // native ngrams expression builds bigrams without a lambda.
       import graft.functions.NativeExpressions.ngrams_native
       val pairs = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("pair_id"),
-          split(col("text"), " ").as("candArr"),
-          split(regexp_replace(col("text"), "^(\\w+ ){3}", ""), " ").as("refArr"))
+        .select(col("doc_id").as("pair_id"), Text.tokens.as("candArr"),
+          Text.tokens(regexp_replace(col("text"), "^(\\w+ ){3}", "")).as("refArr"))
         .cache()
       def grams(arr: Column, k: Int): Column =
         if (k == 1) arr else ngrams_native(arr, k)
@@ -288,8 +288,7 @@ object QualityProbes {
         GROUP BY 1
       """)) { (s, dir) =>
       import org.apache.spark.sql.types.DecimalType
-      val cnt = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val cnt = Text.tokenRows(t(s, dir, "documents"), Seq(col("doc_id")))
         .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
       val ent = cnt.groupBy(col("doc_id"))
         .agg(round(log(sum(col("c")).cast("double"))

@@ -8,6 +8,7 @@ import graft.QueryDef
 import graft.core.Parity
 import graft.core.Tables.{apply => t}
 import graft.functions.NativeExpressions.dot_native
+import graft.search.Text
 
 /** Scale-pattern operators: the join/sampling/sketch shapes a 100 TB
   * deployment leans on once the basic relational inventory is done.
@@ -229,7 +230,7 @@ object ScaleOps {
       // independently and in parallel, which is exactly how a 100 TB
       // corpus shards (window per shard key, never a global order).
       val toks = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), size(split(col("text"), " ")).cast("long").as("tok"))
+        .select(col("doc_id"), col("lang"), size(Text.tokens).cast("long").as("tok"))
       val w = Window.partitionBy("lang").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       toks.withColumn("w", sum(col("tok")).over(w))
@@ -265,7 +266,7 @@ object ScaleOps {
       // sketch drifting out of tolerance fails CORRECTNESS, not just a
       // spec. rsd=0.01 against a 5% gate leaves ~5σ of margin.
       val docs = t(s, dir, "documents")
-      val words = docs.select(col("lang"), explode(split(col("text"), " ")).as("w"))
+      val words = Text.tokenRows(docs, Seq(col("lang")))
       val dw = words.groupBy("lang").agg(
         countDistinct(col("w")).as("exact_distinct"),
         approx_count_distinct(col("w"), 0.01).as("hll_distinct"))
@@ -368,13 +369,8 @@ object ScaleOps {
       // partitions by the token — per-token groups are vocabulary-bounded
       // so no partition outgrows an executor. The ≥100 support floor is
       // the classic LM cutoff and also bounds the result.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 2)
-      val pairs = docs.select(explode(transform(
-        sequence(lit(0), size(col("arr")) - 2),
-        i => struct(element_at(col("arr"), i + 1).as("prev"),
-          element_at(col("arr"), i + 2).as("next")))).as("p"))
+      val docs = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 2)
+      val pairs = docs.select(explode(Text.bigrams(col("arr"), "prev", "next")).as("p"))
         .select(col("p.prev").as("prev"), col("p.next").as("next"))
       val counts = pairs.groupBy(col("prev"), col("next")).agg(count(lit(1)).as("n"))
       val wTot = Window.partitionBy("prev")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
-import graft.search.{Bm25, IndexMaintain}
+import graft.search.{Bm25, IndexMaintain, Text}
 
 /** Text-retrieval surface over the document corpus: inverted-index
   * construction and BM25 ranked search. The reference reaches for
@@ -104,15 +104,10 @@ object SearchRank {
         FROM lists
         WHERE len(list_intersect(list_transform(pa, x -> x + 1), pb)) > 0
       """)) { (s, dir) =>
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 2)
+      val docs = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 2)
       val pos = docs.select(col("doc_id"),
         posexplode(col("arr")).as(Seq("p", "w")))
-      val pairs = docs.select(explode(transform(
-        sequence(lit(0), size(col("arr")) - 2),
-        i => struct(element_at(col("arr"), i + 1).as("a"),
-          element_at(col("arr"), i + 2).as("b")))).as("bg"))
+      val pairs = docs.select(explode(Text.bigrams(col("arr"), "a", "b")).as("bg"))
         .groupBy(col("bg.a").as("a"), col("bg.b").as("b"))
         .agg(count(lit(1)).as("c"))
       val top1 = pairs.orderBy(col("c").desc, col("a"), col("b")).limit(1)
@@ -200,7 +195,7 @@ object SearchRank {
       // ids and query terms broadcast, the corpus scan is semi-join-pruned
       val pos = t(s, dir, "documents")
         .join(broadcast(cand.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p0", "w")))
+        .select(col("doc_id"), posexplode(Text.tokens).as(Seq("p0", "w")))
         .join(broadcast(qterms.select(col("w"))), Seq("w"))
         // DuckDB list positions are 1-based; posexplode is 0-based
         .groupBy(col("doc_id"), col("w")).agg(min(col("p0") + 1).as("first_pos"))
@@ -363,7 +358,7 @@ object SearchRank {
         .cache()
       val arrs = t(s, dir, "documents")
         .join(broadcast(cand.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
+        .select(col("doc_id"), Text.tokens.as("arr"))
       val hits = arrs
         .select(col("doc_id"), posexplode(col("arr")).as(Seq("p0", "w")))
         .join(broadcast(qterms.select(col("w"))), Seq("w"))
@@ -444,9 +439,7 @@ object SearchRank {
           Window.partitionBy(col("doc_id")).orderBy(col("df"), col("w"))))
         .filter(col("rn") <= 3)
         .select(col("doc_id").as("q_id"), col("w"), col("df"))
-      val bag = t(s, dir, "documents").select(col("doc_id"),
-        md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
-          .as("k"))
+      val bag = t(s, dir, "documents").select(col("doc_id"), Text.bagKey.as("k"))
       val agg = Bm25.contributions(tf, q, dl,
           Seq(col("q_id"), col("doc_id").as("neg_id")))
         .filter(col("neg_id") =!= col("q_id"))
@@ -532,15 +525,12 @@ object SearchRank {
       // semi-join prune is a broadcast filter on the scan, and the pruned
       // slice is itself broadcastable
       val tfCut = tf.join(broadcast(cut.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-      val ql = grid
+      val contrib = grid
         .join(broadcast(tfCut), Seq("doc_id", "w"), "left")
         .join(dl, Seq("doc_id"))
         .crossJoin(broadcast(ctot))
-        .select(col("doc_id"),
-          round(log((coalesce(col("tf"), lit(0L)) + lit(100.0) * col("cf") / col("ctot")) /
-            (col("dl") + lit(100.0))), 9).cast("decimal(28,9)").as("c"))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(col("c")).cast("double"), 6).as("ql"))
+        .select(col("doc_id"), Text.dirichlet(100, col("ctot")).as("c"))
+      val ql = Bm25.docScores(contrib, "ql")
       val scores = cut.join(ql, Seq("doc_id"))
       scores.as("a").join(broadcast(scores.as("b")),
           col("a.doc_id") < col("b.doc_id"))
@@ -614,7 +604,7 @@ object SearchRank {
       // split costs no extra corpus pass (posexplode p is 0-based — p < 8
       // matches the oracle's 1-based g <= 8)
       val tokp = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p", "w")))
+        .select(col("doc_id"), posexplode(Text.tokens).as(Seq("p", "w")))
         .withColumn("ist", when(col("p") < 8, 1).otherwise(0))
       val tff = tokp.groupBy(col("w"), col("doc_id"))
         .agg(sum(col("ist")).cast("long").as("tft"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
 import graft.functions.NativeExpressions.dot_native
-import graft.search.{Bm25, IndexMaintain}
+import graft.search.{Bm25, IndexMaintain, Text}
 
 /** Data-selection operators: the pass that decides WHICH documents train —
   * importance resampling toward a target distribution (DSIR, Xie et al.
@@ -64,9 +64,7 @@ object SelectOps {
       // scoring join broadcasts and the only corpus-keyed exchange is the
       // (doc_id, f) partial-count groupBy. One corpus token pass feeds
       // target counts, raw counts, and per-doc features (cached).
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          explode(split(col("text"), " ")).as("w"))
+      val tok = Text.tokenRows(t(s, dir, "documents"), Seq(col("doc_id"), col("lang")))
         .select(col("doc_id"), col("lang"),
           substring(md5(col("w")), 1, 2).as("f"))
         .cache()
@@ -151,13 +149,9 @@ object SelectOps {
       // sketch drifting out of tolerance fails CORRECTNESS, not just a
       // spec. Everything upstream is the vocabulary-bounded LM join from
       // dd30.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 2)
-      val bigrams = docs.select(col("doc_id"), explode(transform(
-        sequence(lit(0), size(col("arr")) - 2),
-        i => struct(element_at(col("arr"), i + 1).as("prev"),
-          element_at(col("arr"), i + 2).as("next")))).as("b"))
+      val docs = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 2)
+      val bigrams = docs.select(col("doc_id"),
+        explode(Text.bigrams(col("arr"), "prev", "next")).as("b"))
         .select(col("doc_id"), col("b.prev").as("prev"), col("b.next").as("next"))
       val pairCounts = bigrams.groupBy(col("prev"), col("next"))
         .agg(count(lit(1)).as("c"))
@@ -385,8 +379,7 @@ object SelectOps {
       // defaults to -1) which would mint 2 phantom tokens per empty word
       // while DuckDB's generate_series(1, 0) is empty — the one place the
       // two engines' range semantics diverge
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("word"))
+      Text.tokenRows(t(s, dir, "documents"), Seq(col("doc_id"), col("lang")), "word")
         .filter(col("word") =!= "")
         .withColumn("s", expr(enc))
         .groupBy(col("lang"))
@@ -659,9 +652,7 @@ object SelectOps {
       val docTop = Bm25.docScores(Bm25.contributions(tf, qterms, dl), "bm25")
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
         .select(col("doc_id"))
-      val chunkWords = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 1)
+      val chunkWords = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 1)
         .select(col("doc_id"), explode(expr(
           """transform(sequence(1, size(arr), 6),
              i -> struct(cast((i - 1) / 6 as long) as chunk_idx,
@@ -714,8 +705,7 @@ object SelectOps {
       // dd37 uses for the dedup confusion matrix.
       val keyed = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
-          (col("n_chars") / 100).cast("long").as("cb"),
-          md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " ")).as("k"))
+          (col("n_chars") / 100).cast("long").as("cb"), Text.bagKey.as("k"))
         .cache()
       def pairs(grouped: DataFrame, out: String): DataFrame =
         grouped.agg(sum(expr("c*(c-1) div 2")).as(out))
@@ -990,8 +980,7 @@ object SelectOps {
       // eval is confusion-cell count algebra: class precision = tp over
       // the PREDICTED column total, recall = tp over the ACTUAL row
       // total; NULLIF guards classes the model never predicts.
-      val tokd = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
+      val tokd = Text.tokenRows(t(s, dir, "documents"), Seq(col("doc_id"), col("lang")))
         .distinct().cache()
       val freq = tokd.groupBy(col("lang"), col("w")).agg(count(lit(1)).as("n"))
       val wp = Window.partitionBy("lang").orderBy(col("n").desc, col("w"))
@@ -1065,9 +1054,7 @@ object SelectOps {
       val corpus = base.unionByName(base.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 10000).as("doc_id"),
           regexp_replace(col("text"), "^(\\w+ ){3}", "").as("text")))
-      val asg = corpus.select((col("doc_id") % 10000).as("truth"),
-        md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
-          .as("pred"))
+      val asg = corpus.select((col("doc_id") % 10000).as("truth"), Text.bagKey.as("pred"))
       val cells = asg.groupBy(col("truth"), col("pred"))
         .agg(count(lit(1)).as("c")).cache()
       def comb(c: Column): Column = (c * (c - 1) / 2).cast("long")
@@ -1140,36 +1127,8 @@ object SelectOps {
         .select(col("doc_id"), col("lang"), col("text"))
       val train = docs.filter(col("doc_id") % 5 =!= 0).cache()
       val test = docs.filter(col("doc_id") % 5 === 0)
-      val cwl = train.select(col("lang"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c")).cache()
-      val tokl = cwl.groupBy(col("lang")).agg(sum(col("c")).as("tl"))
-      val v = cwl.agg(countDistinct(col("w")).as("v"))
-      val nTrain = train.agg(count(lit(1)).as("td"))
-      val pri = train.groupBy(col("lang")).agg(count(lit(1)).as("dl"))
-        .crossJoin(broadcast(nTrain))
-        .select(col("lang"),
-          round(log(col("dl").cast("double") / col("td")), 9)
-            .cast("decimal(28,9)").as("lp"))
-      val stok = test.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      // model joins: tokl (5 rows) and the vocab-bounded count table both
-      // broadcast; the test token stream never shuffles until the
-      // (doc, lang) rollup
-      val contrib = stok
-        .crossJoin(broadcast(tokl))
-        .crossJoin(broadcast(v))
-        .join(broadcast(cwl.select(col("lang"), col("w"), col("c"))),
-          Seq("lang", "w"), "left")
-        .select(col("doc_id"), col("lang"),
-          round(log((coalesce(col("c"), lit(0L)) + 1) /
-            (col("tl") + col("v")).cast("double")), 9)
-            .cast("decimal(28,9)").as("lc"))
-      val scored = contrib.groupBy(col("doc_id"), col("lang"))
-        .agg(sum(col("lc")).cast("decimal(28,9)").as("s0"))
-        .join(broadcast(pri), Seq("lang"))
-        .select(col("doc_id"), col("lang"), (col("s0") + col("lp")).as("score"))
-      val wd = Window.partitionBy("doc_id").orderBy(col("score").desc, col("lang"))
-      scored.withColumn("rn", row_number().over(wd)).filter(col("rn") === 1)
-        .select(col("doc_id"), col("lang").as("predicted"))
+      val cwl = Text.classCounts(train, "lang").cache()
+      Text.naiveBayes(train, cwl, test, "lang", "predicted")
         .join(test.select(col("doc_id"), col("lang").as("actual")), Seq("doc_id"))
         .groupBy(col("actual"), col("predicted"))
         .agg(count(lit(1)).as("n"))
@@ -1237,47 +1196,14 @@ object SelectOps {
         FROM pred p JOIN test t ON p.doc_id = t.doc_id
         GROUP BY 1, 2
       """)) { (s, dir) =>
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"),
-        size(split(col("text"), " ")).cast("long").as("nw"),
-        length(regexp_replace(col("text"), " ", "")).cast("long").as("nc"),
-        size(filter(split(col("text"), " "),
-          w => w.rlike("[A-Za-z]"))).cast("long").as("aw"),
-        size(filter(split(col("text"), " "),
-          w => w.rlike("^[0-9]+$"))).cast("long").as("dw"))
+      val base = t(s, dir, "documents").select(
+        Seq(col("doc_id"), col("text")) ++ Text.gopherSignals: _*)
       val lab = base.select(col("doc_id"), col("text"),
-        when(col("nw").between(20, 80) &&
-          col("nc") >= col("nw") * 4 && col("nc") <= col("nw") * 5 &&
-          col("aw") * 10 >= col("nw") * 7 && col("dw") * 10 <= col("nw") * 3, 1)
-          .otherwise(0).as("y"))
+        when(Text.gopherPass, 1).otherwise(0).as("y"))
       val train = lab.filter(col("doc_id") % 5 =!= 0).cache()
       val test = lab.filter(col("doc_id") % 5 === 0)
-      val cwl = train.select(col("y"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("y"), col("w")).agg(count(lit(1)).as("c")).cache()
-      val tokl = cwl.groupBy(col("y")).agg(sum(col("c")).as("tl"))
-      val v = cwl.agg(countDistinct(col("w")).as("v"))
-      val nTrain = train.agg(count(lit(1)).as("td"))
-      val pri = train.groupBy(col("y")).agg(count(lit(1)).as("dl"))
-        .crossJoin(broadcast(nTrain))
-        .select(col("y"),
-          round(log(col("dl").cast("double") / col("td")), 9)
-            .cast("decimal(28,9)").as("lp"))
-      val stok = test.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val contrib = stok
-        .crossJoin(broadcast(tokl))
-        .crossJoin(broadcast(v))
-        .join(broadcast(cwl.select(col("y"), col("w"), col("c"))),
-          Seq("y", "w"), "left")
-        .select(col("doc_id"), col("y"),
-          round(log((coalesce(col("c"), lit(0L)) + 1) /
-            (col("tl") + col("v")).cast("double")), 9)
-            .cast("decimal(28,9)").as("lc"))
-      val scored = contrib.groupBy(col("doc_id"), col("y"))
-        .agg(sum(col("lc")).cast("decimal(28,9)").as("s0"))
-        .join(broadcast(pri), Seq("y"))
-        .select(col("doc_id"), col("y"), (col("s0") + col("lp")).as("score"))
-      val wd = Window.partitionBy("doc_id").orderBy(col("score").desc, col("y"))
-      scored.withColumn("rn", row_number().over(wd)).filter(col("rn") === 1)
-        .select(col("doc_id"), col("y").as("nb_label"))
+      val cwl = Text.classCounts(train, "y").cache()
+      Text.naiveBayes(train, cwl, test, "y", "nb_label")
         .join(test.select(col("doc_id"), col("y").as("rule_label")), Seq("doc_id"))
         .groupBy(col("rule_label"), col("nb_label"))
         .agg(count(lit(1)).as("n"))
@@ -1321,8 +1247,7 @@ object SelectOps {
       // perfectly agrees (or never) within matches.
       val keyed = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
-          (col("n_chars") / 100).cast("long").as("cb"),
-          md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " ")).as("bag"))
+          (col("n_chars") / 100).cast("long").as("cb"), Text.bagKey.as("bag"))
         .cache()
       def pairs(df: DataFrame, out: String): DataFrame =
         df.agg(sum(expr("c*(c-1) div 2")).as(out))
@@ -1535,12 +1460,8 @@ object SelectOps {
       // ~31-word vocabulary makes unigram signatures near-collide
       // corpus-wide (dd60's lesson); the 3-gram space gives random pairs
       // Hamming ~16 so the d<=3 ball holds only real near-dups.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 3)
-      val sh = docs.select(col("doc_id"),
-        explode(array_distinct(
-          graft.functions.NativeExpressions.ngrams_native(col("arr"), 3))).as("s"))
+      val docs = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 3)
+      val sh = docs.select(col("doc_id"), explode(Text.shingleSet(col("arr"))).as("s"))
       val hashed = sh.select(col("doc_id"),
         conv(substring(md5(col("s")), 1, 8), 16, 10).cast("long").as("h"))
       val voteExprs = (0 until 32).map(b =>
@@ -1738,13 +1659,9 @@ object SelectOps {
       // — "york" is frequent but follows only "new", so its unigram
       // backoff weight collapses. Per-bigram cost freezes round(9) decimal
       // so doc sums are order-free.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 2)
-      val bigrams = docs.select(col("doc_id"), explode(transform(
-        sequence(lit(0), size(col("arr")) - 2),
-        i => struct(element_at(col("arr"), i + 1).as("prev"),
-          element_at(col("arr"), i + 2).as("next")))).as("b"))
+      val docs = Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 2)
+      val bigrams = docs.select(col("doc_id"),
+        explode(Text.bigrams(col("arr"), "prev", "next")).as("b"))
         .select(col("doc_id"), col("b.prev").as("prev"), col("b.next").as("next"))
       val pc = bigrams.groupBy(col("prev"), col("next"))
         .agg(count(lit(1)).as("c")).cache()
@@ -1856,8 +1773,7 @@ object SelectOps {
       // rows; the ordering join broadcasts.
       val src = t(s, dir, "documents")
         .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " "))).cast("long").as("tokens"))
+        .agg(count(lit(1)).as("n_docs"), sum(size(Text.tokens)).cast("long").as("tokens"))
       val tot = src.agg(sum(col("tokens")).as("t"))
       // w at (18,9), not (28,9): the cum_w addition below is
       // decimal(p1,9) + decimal(p1+10,9) and Spark drops the SCALE to 8
@@ -1912,9 +1828,9 @@ object SelectOps {
     import SelectOpsSql._
     val feats = t(s, dir, "documents")
       .select(
-        log(size(split(col("text"), " ")).cast("double")).as("x1"),
-        (size(array_distinct(split(col("text"), " "))).cast("double") /
-          size(split(col("text"), " "))).as("x2"),
+        log(size(Text.tokens).cast("double")).as("x1"),
+        (size(array_distinct(Text.tokens)).cast("double") /
+          size(Text.tokens)).as("x2"),
         when(col("lang") === "en", 1.0).otherwise(0.0).as("y"))
       .cache()
     def frozen(e: String, alias: String): Column =

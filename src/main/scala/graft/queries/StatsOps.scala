@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Distribution-level statistical tests and corpus diagnostics a
   * training-data pipeline runs before trusting a source: rank tests
@@ -557,11 +558,10 @@ object StatsOps {
         FROM pts p CROSS JOIN fit f
       """)) { (s, dir) =>
       val docs = t(s, dir, "documents")
-        .select(col("doc_id"), size(split(col("text"), " ")).as("tokcnt"))
+        .select(col("doc_id"), size(Text.tokens).as("tokcnt"))
         .cache()
       // token-grain first-occurrence: one corpus-sized shuffle keyed by token
-      val firsts = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val firsts = Text.tokenRows(t(s, dir, "documents"), Seq(col("doc_id")))
         .groupBy("w").agg(min(col("doc_id")).as("first_doc"))
       val cps = docs.agg((max(col("doc_id")) + 1).as("hi"))
         .select(explode(array((1 to 10).map(lit): _*)).as("i"), col("hi"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Global training-stream packing — the complement of dd26's per-shard
   * packing (ScaleOps.scala:210). dd26 packs each language independently
@@ -42,8 +43,7 @@ object TrainPrep {
       """)) { (s, dir) =>
       val cap = 256L
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        floor(col("doc_id") / 64).as("bucket"))
+        size(Text.tokens).cast("long").as("n_tokens"), floor(col("doc_id") / 64).as("bucket"))
       val counts = toks.groupBy(col("bucket")).agg(sum(col("n_tokens")).as("c"))
       // bucket offsets via an inequality join over the TINY bucket-count
       // relation (O(B^2) pairs, B = corpus/64 buckets — broadcastable at
@@ -180,7 +180,7 @@ object TrainPrep {
         FROM sw GROUP BY cs
       """)) { (s, dir) =>
       val nt = t(s, dir, "documents")
-        .select(size(split(col("text"), " ")).cast("long").as("n"))
+        .select(size(Text.tokens).cast("long").as("n"))
         .filter(col("n") > 0)
       val cs = col("cs")
       val padChunks = floor((col("n") + cs - 1) / cs)
@@ -225,9 +225,7 @@ object TrainPrep {
                CAST(least(8, len(arr) - st + 1) AS BIGINT) AS n_tokens
         FROM c
       """)) { (s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("arr"))
-        .filter(size(col("arr")) >= 1)
+      Text.tokenArrays(t(s, dir, "documents"), Seq(col("doc_id")), 1)
         .select(col("doc_id"), posexplode(expr(
           """transform(sequence(1, size(arr), 6), i -> struct(
              i as st,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
 import graft.functions.NativeExpressions.dot_native
+import graft.search.Text
 
 /** Data-trust operators: the audit moves a training-data platform runs
   * AFTER curation decides what to keep — per-example valuation (exact
@@ -160,7 +161,7 @@ object TrustOps {
     * the per-doc top-20% selection is a bounded per-doc window.
     */
   def minkBits(docs: DataFrame): DataFrame = {
-    val tok = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+    val tok = Text.tokenRows(docs, Seq(col("doc_id")))
     val cw = tok.groupBy("w").agg(count(lit(1)).as("c"))
     val tot = tok.agg(count(lit(1)).as("nt"), countDistinct(col("w")).as("v"))
     val lm = cw.crossJoin(broadcast(tot))
@@ -193,8 +194,7 @@ object TrustOps {
     * is a second narrow pass.
     */
   def conformalCoverage(docs: DataFrame): DataFrame = {
-    val d = docs.select(col("doc_id"), col("lang"), col("n_chars"),
-      size(split(col("text"), " ")).as("n_tok"),
+    val d = docs.select(col("doc_id"), col("lang"), col("n_chars"), size(Text.tokens).as("n_tok"),
       (col("doc_id") % 2).as("half"))
     val fit = d.filter(col("half") === 0).groupBy("lang")
       .agg(sum(col("n_chars")).as("sc"), sum(col("n_tok")).as("st"),

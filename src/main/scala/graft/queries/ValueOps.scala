@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.core.Tables.{apply => t}
+import graft.search.Text
 
 /** Data-valuation and selection operators: the four curation moves that
   * decide WHICH rows a training corpus keeps, beyond near-dup removal —
@@ -37,9 +38,7 @@ object ValueOps {
     * @param docs (doc_id, text); k shingle width; w window in hashes.
     */
   def winnowFingerprints(docs: DataFrame, k: Int, w: Int): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"), split(col("text"), " ").as("arr"))
-      .filter(size(col("arr")) >= k)
+    val sh = Text.tokenArrays(docs, Seq(col("doc_id")), k)
       .select(col("doc_id"),
         posexplode(graft.functions.NativeExpressions.ngrams_native(col("arr"), k))
           .as(Seq("pos", "sh")))
@@ -181,7 +180,7 @@ object ValueOps {
     * boundaries). */
   def textTileGaps(docs: DataFrame, blockSize: Int): DataFrame = {
     val bv = docs
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
+      .select(col("doc_id"), posexplode(Text.tokens).as(Seq("pos", "w")))
       .select(col("doc_id"), expr(s"pos div $blockSize").as("blk"), col("w"))
       .distinct()
     val bn = bv.groupBy("doc_id", "blk").agg(count(lit(1)).as("nb"))

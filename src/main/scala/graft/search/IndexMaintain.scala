@@ -34,7 +34,7 @@ object IndexMaintain {
 
   /** Tokenize documents(doc_id, text) to the postings grain. */
   def postings(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+    Text.tokenRows(docs, Seq(col("doc_id")))
       .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("tf"))
 
   /** The ir1-shaped index: term, df, cf, tf-impact-ordered top-3

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.CacheScope
-import graft.queries.DocPipeline
 import graft.resolve.LshBands
+import graft.search.Text
 
 /** Streaming NEAR-dup admission: document micro-batches probe a standing
   * MinHash-LSH index and each doc is labeled `near_dup` (best verified
@@ -40,9 +40,9 @@ final class LshAdmitMaintainer(spark: SparkSession, workDir: String,
   /** Bands, exploded shingles and sizes of `docs`, all three read from
     * one shingle array cached in `scope`. */
   private def parts(docs: DataFrame, scope: CacheScope): (DataFrame, DataFrame, DataFrame) = {
-    val arr = scope.cached(DocPipeline.shingleArr(docs.select(col("doc_id"), col("text"))))
+    val arr = scope.cached(Text.shingleArr(docs.select(col("doc_id"), col("text"))))
     (LshBands.bandsOf(arr),
-      arr.select(col("doc_id"), explode(col("shArr")).as("sh")),
+      Text.shingles(arr),
       arr.select(col("doc_id"), size(col("shArr")).cast("long").as("n")))
   }
 
