@@ -17,9 +17,8 @@
 # changes; the checkout's own path in file locations; JVM lambda names and
 # identity hashes (`$$Lambda$6900/0x00007f79ad85ddf8@48a28383`,
 # `TopK@3e666559`); and the source line of an RDD's call site
-# (`at localCheckpoint at ValueOps.scala:90`). One difference is left:
-# Spark orders the groups of a multi-column distinct aggregate by hash, so
-# dd79_url_canonical's Expand lists `url` and `curl` in either order. The parent is checked out once in a git worktree
+# (`at localCheckpoint at ValueOps.scala:90`). Two runs of one build diff
+# empty. The parent is checked out once in a git worktree
 # under ${TMPDIR:-/tmp}, the same directory scripts/perf_ab.sh uses, and
 # reused by later calls (remove it with `git worktree remove DIR`).
 # Prints the diff; exits 1 if it is not empty.

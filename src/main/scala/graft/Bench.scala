@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-import graft.core.Sessions
+import graft.core.{LocalFs, Sessions}
 
 /** Benchmark main. Per VERDICT r1 findings 1-3:
   *   - forces full evaluation with a noop-format write (Catalyst cannot
@@ -27,7 +27,7 @@ object Bench {
     val spark = Sessions.local()
 
     def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      LocalFs.writer(fn(spark, sfDir)).format("noop").mode("overwrite").save()
 
     // Order-insensitivity: drop every cached/checkpointed block a query
     // left behind before timing the next one. Iterative queries

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Layout, Sessions, Tables}
+import graft.core.{Layout, LocalFs, Sessions, Tables}
 import graft.search.Text
 
 /** Derived inputs for `Bench`: a testdata directory scaled by key-offset
@@ -90,7 +90,7 @@ object Datasets {
     stamped(dir, "_GENERATOR", s"$GeneratorVersion replicas=$replicas base=$base\n") {
       def t(n: String) = spark.read.parquet(s"$base/$n.parquet")
       def w(df: DataFrame, n: String) =
-        df.write.mode("overwrite").parquet(s"$dir/$n.parquet")
+        LocalFs.writer(df).mode("overwrite").parquet(s"$dir/$n.parquet")
       w(t("region"), "region")
       w(t("nation"), "nation")
       w(replicate(t("customer"), replicas, Map("c_custkey" -> CustOff)), "customer")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 
-import graft.core.Sessions
+import graft.core.{LocalFs, Sessions}
 
 /** Plan-audit helper.
   * `runMain graft.Explain [sfDir] [name ...]` — formatted physical plan
@@ -50,7 +50,7 @@ object Explain {
       picked.foreach { q =>
         try {
           val df = q.run(spark, sfDir)
-          df.write.mode("overwrite").format("noop").save()
+          LocalFs.writer(df).mode("overwrite").format("noop").save()
           val nodes = flatten(df.queryExecution.executedPlan)
           val fb = nodes.flatMap(_.expressions).flatMap(_.collect {
             case f: CodegenFallback => f.getClass.getSimpleName
@@ -65,7 +65,7 @@ object Explain {
       println("|---|---|---|---|---|---|")
       picked.foreach { q =>
         val df = q.run(spark, sfDir)
-        df.write.mode("overwrite").format("noop").save()
+        LocalFs.writer(df).mode("overwrite").format("noop").save()
         val nodes = flatten(df.queryExecution.executedPlan)
         val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
         val single = shuffles.count(_.outputPartitioning.numPartitions == 1)

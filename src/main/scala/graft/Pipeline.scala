@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
-import graft.core.{Sessions, Tables, WriteOptimizer}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.core.{LocalFs, Sessions, Tables, WriteOptimizer}
 import graft.ingest.RawZone
 import graft.merge.MergeKernels
 import graft.ql.QueryGuard
@@ -27,10 +31,14 @@ object Pipeline {
 
   /** Schema of the gold table this pipeline itself writes, pinned so the
     * re-reads skip footer inference (the write fully determines it). */
-  val GoldSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
+  val GoldSchema: StructType =
+    StructType.fromDDL(
       "pk BIGINT, status STRING, price DOUBLE, updated_epoch BIGINT, " +
         "li_count BIGINT, qty_tot BIGINT")
+
+  /** The land → merge result: the cached merge, its op counts for the
+    * log, and the land read's record and quarantine counts. */
+  private final case class Landing(merged: DataFrame, ops: String, records: Long, quarantined: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -90,15 +98,18 @@ object Pipeline {
     val dropDir = s"$workDir/raw/orders"
     val silverPath = s"$workDir/silver/orders"
     val goldPath = s"$workDir/gold/order_rollup"
+    // the drop's columns in JSON inference order (sorted by name): the
+    // land read pins them, so it runs no schema-inference job
+    lazy val staged = Tables(spark, sfDir, "orders")
+      .filter(col("o_orderkey") % 2 === 0)
+      .select(
+        col("o_orderkey").as("ORDER_ID"),
+        col("o_orderstatus").as("ORDER_STATUS"),
+        col("o_totalprice").as("TOTAL_PRICE"),
+        date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("ORDER_DATE"))
+    lazy val dropSchema = StructType(staged.schema.fields.sortBy(_.name).map(_.copy(nullable = true)))
     lazy val dropped: Unit = {
-      val staged0 = Tables(spark, sfDir, "orders")
-        .filter(col("o_orderkey") % 2 === 0)
-        .select(
-          col("o_orderkey").as("ORDER_ID"),
-          col("o_orderstatus").as("ORDER_STATUS"),
-          col("o_totalprice").as("TOTAL_PRICE"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("ORDER_DATE"))
-      staged0.repartition(8).write.mode("overwrite").json(dropDir)
+      LocalFs.writer(staged.repartition(8)).mode("overwrite").json(dropDir)
       // plant one corrupt record in the drop
       val extra = new java.io.PrintWriter(
         Files.newBufferedWriter(Paths.get(dropDir, "part-corrupt.json")))
@@ -106,60 +117,61 @@ object Pipeline {
       extra.close()
     }
 
-    lazy val landed = { dropped; RawZone.readJsonDrops(spark, dropDir).cache() }
-
-    // ONE aggregate job yields (total, quarantined) over the cached read;
-    // the conform stage's typed-row count is total - quarantined by
-    // construction (the casts never drop rows), so land + conform need a
-    // single job where three count() scans ran before (guide §1.2: don't
-    // recompute what a finished job already proved).
-    lazy val landCounts: (Long, Long) = {
-      val r = landed.agg(count(lit(1)), count(col(RawZone.CorruptCol))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    // UPPER_SNAKE API keys → silver schema, typed
-    lazy val conformed = landed.filter(col(RawZone.CorruptCol).isNull)
-      .select(
-        col("ORDER_ID").cast("long").as("pk"),
-        col("ORDER_STATUS").as("status"),
-        col("TOTAL_PRICE").cast("double").as("price"),
-        unix_timestamp(try_to_timestamp(col("ORDER_DATE"),
-          lit("yyyy-MM-dd HH:mm:ss"))).as("updated_epoch"))
-
-    // merge into the silver target (previous state: 3/4 of orders, stale
-    // where key%7==0) with op classification
-    lazy val merged = {
+    // land → conform → merge as one lazy plan, built by ONE job: the
+    // merge's op-count collect, which also builds the `merged` cache.
+    // The land read observes its record and quarantine counts, and
+    // Spark reports an observation inside a cached plan with the query
+    // that builds the cache, so land and conform run no job of their
+    // own (the conform stage's typed-row count is records - quarantined
+    // by construction: the casts never drop rows). The cache stays:
+    // Layout.writePartitionedByMonth's partition-count pin reads the
+    // plan's size estimate, and a cached relation reports its real
+    // in-memory size only once built. A failed collect may leave partial
+    // counts in the cached plan's accumulators, so it drops the cache and
+    // the next attempt starts over with a fresh read and Observation.
+    lazy val landing: Landing = {
+      dropped
+      val observed = Observation("land")
+      val landed = RawZone.readJsonDrops(spark, dropDir, Some(dropSchema))
+        .observe(observed, count(lit(1)).as("records"),
+          count(col(RawZone.CorruptCol)).as("quarantined"))
+      // UPPER_SNAKE API keys → silver schema, typed
+      val conformed = landed.filter(col(RawZone.CorruptCol).isNull)
+        .select(
+          col("ORDER_ID").cast("long").as("pk"),
+          col("ORDER_STATUS").as("status"),
+          col("TOTAL_PRICE").cast("double").as("price"),
+          unix_timestamp(try_to_timestamp(col("ORDER_DATE"),
+            lit("yyyy-MM-dd HH:mm:ss"))).as("updated_epoch"))
+      // merge into the silver target (previous state: 3/4 of orders, stale
+      // where key%7==0) with op classification
       val target = Tables(spark, sfDir, "orders")
         .filter(col("o_orderkey") % 4 =!= 0)
         .select(col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
           col("o_totalprice").as("price"),
           (unix_timestamp(col("o_orderdate")) -
             when(col("o_orderkey") % 7 === 0, 86400L).otherwise(0L)).as("updated_epoch"))
-      MergeKernels.upsertClassify(target, conformed, Seq("pk")).cache()
+      val merged = MergeKernels.upsertClassify(target, conformed, Seq("pk")).cache()
+      try {
+        val ops = merged.groupBy("op").count().collect()
+          .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
+        val counts = Await.result(observed.future, 1.minute)
+        Landing(merged, ops, counts.getAs[Long]("records"), counts.getAs[Long]("quarantined"))
+      } catch { case e: Throwable => merged.unpersist(); throw e }
     }
 
     Seq(
       Orchestrator.Block("land", () => {
-        val (total, corrupt) = landCounts
-        log += "land" -> s"$total records, $corrupt quarantined"
+        log += "land" -> s"${landing.records} records, ${landing.quarantined} quarantined"
       }),
 
       Orchestrator.Block("conform", () => {
-        log += "conform" -> s"${landCounts._1 - landCounts._2} rows typed"
+        log += "conform" -> s"${landing.records - landing.quarantined} rows typed"
       }),
 
       // persist the merge; `merged` stays cached for the gold block,
       // which releases it
       Orchestrator.Block("merge", () => {
-        // this collect also materialises the `merged` cache, which
-        // Layout.writePartitionedByMonth needs: its partition-count pin
-        // reads the plan's size estimate, and a cached relation reports
-        // its real in-memory size only once built
-        val stats = merged.groupBy("op").count().collect()
-          .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
-        // `merged` is built, so nothing reads `landed` again
-        landed.unpersist()
         // round-10 default layout: silver lands MONTH-PARTITIONED on the
         // modification time and pk-SORTED within each month — the Spark
         // analog of the reference's COALESCE(date_modified, date_created)
@@ -168,10 +180,10 @@ object Pipeline {
         // min-max pruning on key probes, and month-clustered writes keep
         // one file per (month, writer) instead of tasks × months slivers.
         graft.core.Layout.writePartitionedByMonth(
-          merged.drop("op")
+          landing.merged.drop("op")
             .withColumn("updated_ts", timestamp_seconds(col("updated_epoch"))),
           "updated_ts", silverPath, sortCols = Seq("pk"))
-        log += "merge" -> stats
+        log += "merge" -> landing.ops
       }),
 
       // gold rebuild: wide rollup joining silver to children (refreshKey:
@@ -181,6 +193,7 @@ object Pipeline {
         // silver's rows straight from the merge block's cache: re-reading
         // the table just written would list its ~80 month directories
         // (one Spark job past 32 paths) and scan every file again
+        val merged = landing.merged
         val silver = merged.drop("op")
         // keyed fan-out (size-gated no-op at scale): AQE's byte-based
         // coalescing shrank this rollup's exchange to 3 tasks — byte-light

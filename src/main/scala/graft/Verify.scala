@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import graft.core.Sessions
+import graft.core.{LocalFs, Sessions}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -26,7 +26,7 @@ object Verify {
       // file, but coalesce would collapse the whole upstream plan to one
       // task; repartition keeps the compute parallel and shuffles only the
       // (small) result.
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
+      try LocalFs.writer(fn(spark, sfDir).repartition(1)).mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getName}: ${e.getMessage}"

@@ -30,8 +30,8 @@ object Layout {
     *   value prunes across months. */
   def writePartitionedByMonth(df: DataFrame, tsCol: String, path: String,
       filesPerMonth: Int = 1, sortCols: Seq[String] = Nil): Unit =
-    clusteredByMonth(df, tsCol, filesPerMonth, sortCols)
-      .write.mode("overwrite").partitionBy("part_month").parquet(path)
+    LocalFs.writer(clusteredByMonth(df, tsCol, filesPerMonth, sortCols))
+      .mode("overwrite").partitionBy("part_month").parquet(path)
 
   /** The rows `writePartitionedByMonth` writes: `df` plus `part_month`,
     * clustered on it and sorted within each partition. */
@@ -65,7 +65,7 @@ object Layout {
   /** Persist both sides bucketed on the join key: subsequent equi-joins
     * between them are exchange-free (no shuffle in the plan). */
   def writeBucketed(df: DataFrame, key: String, buckets: Int, table: String): Unit =
-    df.write.mode("overwrite").format("parquet")
+    LocalFs.writer(df).mode("overwrite").format("parquet")
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 
   /** Salt a skewed key into `salts` subkeys; the dimension side is

@@ -64,7 +64,7 @@ object WriteOptimizer {
     val sorted =
       if (sortCols.nonEmpty) df.repartition(n).sortWithinPartitions(sortCols.map(col): _*)
       else df.repartition(n)
-    sorted.write.mode("overwrite").parquet(path)
+    LocalFs.writer(sorted).mode("overwrite").parquet(path)
     n
   }
 
@@ -85,7 +85,7 @@ object WriteOptimizer {
     require(maxFilesPerPart > 0, s"maxFilesPerPart must be positive: $maxFilesPerPart")
     val dataCols = df.columns.filterNot(_ == partCol).map(col).toSeq
     val salt = pmod(hash(dataCols: _*), lit(maxFilesPerPart))
-    df.repartition(col(partCol), salt)
-      .write.mode("overwrite").partitionBy(partCol).parquet(path)
+    LocalFs.writer(df.repartition(col(partCol), salt))
+      .mode("overwrite").partitionBy(partCol).parquet(path)
   }
 }

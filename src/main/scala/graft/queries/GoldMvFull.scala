@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
+import graft.core.LocalFs
 import graft.core.Tables.{apply => t}
 
 /** Full-breadth gold MV pipelines (SURVEY.md §3.2). The reference's
@@ -731,7 +732,7 @@ object GoldMvFull {
         else {
           val snap = java.nio.file.Paths.get("target", "replay",
             "mv_accuseds_incr_v1").toString
-          buildAccuseds(s, dir, liV1, liV1).write.mode("overwrite").parquet(snap)
+          LocalFs.writer(buildAccuseds(s, dir, liV1, liV1)).mode("overwrite").parquet(snap)
           System.gc() // let ContextCleaner reclaim the build's shuffle files
           s.read.parquet(snap)
         }

@@ -1362,9 +1362,10 @@ object SelectOps {
       """)) { (s, dir) =>
       // Canonicalization is pure per-row string algebra (codegen'd regexp
       // + higher-order param sort); the only aggregation is the 1-row
-      // distinct-count fold, two-phase under the hood. The rules are the
-      // conservative, semantics-preserving subset: path CASE is kept
-      // (paths are case-sensitive), only the scheme/host lower.
+      // distinct-count fold, as set sizes: two count-distincts in one
+      // aggregate plan an Expand whose group order varies between runs.
+      // The rules are the conservative, semantics-preserving subset: path
+      // CASE is kept (paths are case-sensitive), only the scheme/host lower.
       val plantedUrl = expr("""
         CASE (doc_id div 3) % 6
           WHEN 0 THEN concat('https://shop.example.com/item', CAST((doc_id div 3) % 25 AS STRING), '?b=2&a=1')
@@ -1388,8 +1389,8 @@ object SelectOps {
         .withColumn("curl", concat(col("scheme"), lit("://"), col("host"), col("path"),
           when(col("cq") =!= "", concat(lit("?"), col("cq"))).otherwise(lit(""))))
         .agg(count(lit(1)).as("n_urls"),
-          countDistinct(col("url")).as("raw_distinct"),
-          countDistinct(col("curl")).as("canon_distinct"))
+          size(collect_set(col("url"))).cast("long").as("raw_distinct"),
+          size(collect_set(col("curl"))).cast("long").as("canon_distinct"))
         .select(col("n_urls"), col("raw_distinct"), col("canon_distinct"),
           round(lit(1) - col("canon_distinct") / col("raw_distinct").cast("double"), 6)
             .as("collapse_rate"))

@@ -66,12 +66,20 @@ object IndexMaintain {
     * union and every deltaPost term is affected by construction. One
     * base-postings pass each, no serial write → rescan → write chain. */
   def refresh(basePostings: DataFrame, baseIndex: DataFrame,
-      deltaDocs: DataFrame, scope: CacheScope): (DataFrame, DataFrame) = {
-    // cached: the id set feeds THREE broadcasts (postings anti-join,
-    // affected-term semi-join, splice anti-join) and exchange reuse does
-    // not always unify separately-planned broadcast builds of the same
-    // distinct — without the cache each one re-runs the delta groupBy
-    val deltaIds = scope.cached(deltaDocs.select(col("doc_id")).distinct())
+      deltaDocs: DataFrame, scope: CacheScope): (DataFrame, DataFrame) =
+    refresh(basePostings, baseIndex, deltaDocs, deltaIds(deltaDocs, scope), scope)
+
+  /** The delta's distinct doc ids, cached in `scope`: the id set feeds
+    * THREE broadcasts (postings anti-join, affected-term semi-join,
+    * splice anti-join) and exchange reuse does not always unify
+    * separately-planned broadcast builds of the same distinct — without
+    * the cache each one re-runs the delta groupBy. */
+  def deltaIds(deltaDocs: DataFrame, scope: CacheScope): DataFrame =
+    scope.cached(deltaDocs.select(col("doc_id")).distinct())
+
+  /** [[refresh]] over the delta's [[deltaIds]]. */
+  def refresh(basePostings: DataFrame, baseIndex: DataFrame,
+      deltaDocs: DataFrame, deltaIds: DataFrame, scope: CacheScope): (DataFrame, DataFrame) = {
     // tokenize the delta ONCE (cached — delta-bounded by definition):
     // both the postings splice and the affected-term set read it
     val deltaPost = scope.cached(postings(deltaDocs))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.LocalFs
+
 /** Streaming PSI drift monitor — the streaming face of dd53_psi_drift.
   *
   * A fixed reference histogram (pinned at init) is compared against a
@@ -34,7 +36,7 @@ final class DriftMonitor(
 
   /** Pin the reference histogram; start the current window empty. */
   def init(reference: DataFrame, valueCol: String): Unit = synchronized {
-    bucketize(reference, valueCol).write.mode("overwrite").parquet(refPath)
+    LocalFs.writer(bucketize(reference, valueCol)).mode("overwrite").parquet(refPath)
     state.reset("cur" -> (() => spark.emptyDataFrame
       .select(lit(0).as("bucket"), lit(0L).as("n")).limit(0)))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.LocalFs
 import graft.gold.GoldIncremental
 
 /** Streaming maintenance of the w15 ordered-funnel state: per-user
@@ -51,7 +52,7 @@ final class FunnelMaintainer(spark: SparkSession, workDir: String) {
   }
 
   def init(events0: DataFrame): Unit = synchronized {
-    events0.write.mode("overwrite").parquet(logPath)
+    LocalFs.writer(events0).mode("overwrite").parquet(logPath)
     state.reset("funnel" -> (() => cascade(eventLog)))
   }
 
@@ -69,8 +70,8 @@ final class FunnelMaintainer(spark: SparkSession, workDir: String) {
     * touched users only, splice their funnel rows. */
   def applyBatch(batch: DataFrame): Unit = synchronized {
     if (!batch.isEmpty) {
-      batch.select(eventLog.columns.map(col).toIndexedSeq: _*)
-        .write.mode("append").parquet(logPath)
+      LocalFs.writer(batch.select(eventLog.columns.map(col).toIndexedSeq: _*))
+        .mode("append").parquet(logPath)
       val keys = batch.select(col("user_id")).distinct()
       val log = eventLog
       val prev = funnel

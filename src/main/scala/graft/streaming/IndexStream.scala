@@ -42,18 +42,21 @@ final class IndexMaintainer(spark: SparkSession, workDir: String) {
 
   /** One micro-batch of documents(doc_id, text): splice postings, refresh
     * only the touched terms' index rows. */
-  def applyBatch(batch: DataFrame): Unit = synchronized {
-    if (!batch.isEmpty) CacheScope { scope =>
+  def applyBatch(batch: DataFrame): Unit = synchronized(CacheScope { scope =>
+    val docs = batch.select(col("doc_id"), col("text"))
+    // the empty-batch gate counts the delta's id set, which builds that
+    // cache before the concurrent writes below read it
+    val ids = IndexMaintain.deltaIds(docs, scope)
+    if (ids.count() > 0) {
       // the two refreshed tables are independent, so their writes run
       // concurrently (guide §2.6): the splice chain executes once for
       // the postings write while the affected-term index recompute feeds
       // the index write in a parallel job chain. Later consumers read
       // the written tables.
-      val (p1, i1) = IndexMaintain.refresh(postingsState, index,
-        batch.select(col("doc_id"), col("text")), scope)
+      val (p1, i1) = IndexMaintain.refresh(postingsState, index, docs, ids, scope)
       state.commit("postings" -> (() => p1), "index" -> (() => i1))
     }
-  }
+  })
 
   def start(docs: DataFrame, queryName: String): StreamingQuery =
     VersionedState.start(docs, queryName)(applyBatch)

@@ -75,8 +75,12 @@ final class LshAdmitMaintainer(spark: SparkSession, workDir: String,
     * the standing index, then admit the whole batch. Intra-batch
     * near-dups are NOT matched against each other (strictly-earlier
     * semantics — within a batch there is no order). */
-  def applyBatch(batch: DataFrame): Unit = synchronized {
-    if (!batch.isEmpty) CacheScope { scope =>
+  def applyBatch(batch0: DataFrame): Unit = synchronized(CacheScope { scope =>
+    // the empty-batch gate counts the cached batch, which builds it
+    // before the concurrent writes below read it (a doc too short to
+    // shingle still gets a decision, so the shingle frame cannot gate)
+    val batch = scope.cached(batch0.select(col("doc_id"), col("text")))
+    if (batch.count() > 0) {
       val (dBands, dSh, dN) = parts(batch, scope)
       val sBands = bands
       val cand = dBands.as("d").join(sBands.as("s"),
@@ -109,7 +113,7 @@ final class LshAdmitMaintainer(spark: SparkSession, workDir: String,
         "shingles" -> (() => sShingles.unionByName(dSh)),
         "sizes" -> (() => sSizes.unionByName(dN)))
     }
-  }
+  })
 
   def start(docs: DataFrame, queryName: String): StreamingQuery =
     VersionedState.start(docs, queryName)(applyBatch)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.{Par, WriteOptimizer}
+import graft.core.{LocalFs, Par, WriteOptimizer}
 
 /** The versioned-parquet state store a streaming maintainer holds. It
   * owns the whole lifecycle of a fixed set of state tables, so a
@@ -25,8 +25,8 @@ import graft.core.{Par, WriteOptimizer}
   * The legs run on pool threads without the store's lock, so readers
   * keep seeing the previous version until the commit swaps in the next.
   *
-  * @param compact write each table as one file while the optimizer sizes
-  *   it under one [[WriteOptimizer.DefaultTargetBytes]] file (see
+  * @param compact write each table as one file while its current version
+  *   is under one [[WriteOptimizer.DefaultTargetBytes]] file (see
   *   [[VersionedState.writeRead]]).
   */
 final class VersionedState(spark: SparkSession, workDir: String,
@@ -54,19 +54,25 @@ final class VersionedState(spark: SparkSession, workDir: String,
     * would silently resurrect stale state on the next recovery. */
   def reset(writes: (String, () => DataFrame)*): Unit = {
     VersionedState.dropVersions(workDir, tables)
-    commitAt(0, writes)
+    commitAt(0, writes, None)
   }
 
   /** Write every table of the next version and make it current; returns
     * the new version. */
-  def commit(writes: (String, () => DataFrame)*): Int =
-    commitAt(current + 1, writes)
+  def commit(writes: (String, () => DataFrame)*): Int = {
+    val base = current
+    commitAt(base + 1, writes, Some(base))
+  }
 
-  private def commitAt(next: Int, writes: Seq[(String, () => DataFrame)]): Int = {
+  private def commitAt(next: Int, writes: Seq[(String, () => DataFrame)], base: Option[Int]): Int = {
     require(writes.map(_._1).sorted == tables.sorted,
       s"a commit writes every table of ${tables.mkString(", ")}: got ${writes.map(_._1).mkString(", ")}")
     val written = Par.run(writes.map { case (table, df) =>
-      () => VersionedState.writeRead(df(), pathOf(table, next), compact)
+      () => {
+        val d = df()
+        VersionedState.writeRead(d, pathOf(table, next),
+          compact && VersionedState.underOneFile(d, base.map(pathOf(table, _))))
+      }
     }: _*)
     synchronized {
       frames.clear()
@@ -103,27 +109,37 @@ object VersionedState {
     * state tables many times per batch — the replay gates paid 20-30
     * such driver-side jobs each (measured, OPTIMIZATION_r11.md). The
     * pinned schema is exactly what was just written, so inference would
-    * discover the same thing. */
+    * discover the same thing.
+    *
+    * `compact`: write one file ([[underOneFile]] decides when). A
+    * maintainer state is usually the tail of a UNION (spliced base +
+    * delta) whose partition count is the SUM of its children's — no
+    * exchange on top, so AQE never coalesces it and each version GAINS
+    * files (measured 33 → 49 → 57 across three index batches; every
+    * downstream state scan then a 30+-task stage over <1 MB).
+    * OPT-IN because it serializes the write task: measured a win only
+    * for states that are slim AND re-scanned several times per batch
+    * (the index maintainer); the fat rendered-JSON gold state LOST more
+    * on the single-task parquet encode than the reads saved
+    * (st_gold/st_metrics +1.2 s, OPTIMIZATION_r11.md). */
   def writeRead(df: DataFrame, path: String, compact: Boolean = false): DataFrame = {
-    // compact=true: repartition small states to one file before writing.
-    // A maintainer state is usually the tail of a UNION (spliced base +
-    // delta) whose partition count is the SUM of its children's — no
-    // exchange on top, so AQE never coalesces it and each version GAINS
-    // files (measured 33 → 49 → 57 across three index batches; every
-    // downstream state scan then a 30+-task stage over <1 MB). Size-gated
-    // on the optimizer's estimate (one 128 MiB file): past the threshold
-    // the write is untouched, so at production scale no state-sized
-    // shuffle is added.
-    // OPT-IN because it serializes the write task: measured a win only
-    // for states that are slim AND re-scanned several times per batch
-    // (the index maintainer); the fat rendered-JSON gold state LOST more
-    // on the single-task parquet encode than the reads saved
-    // (st_gold/st_metrics +1.2 s, OPTIMIZATION_r11.md).
-    val sized = if (compact &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes < WriteOptimizer.DefaultTargetBytes)
-      df.repartition(1) else df
-    sized.write.mode("overwrite").parquet(path)
+    LocalFs.writer(if (compact) df.repartition(1) else df).mode("overwrite").parquet(path)
     df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
+  /** Whether the next version of a state table fits one
+    * [[WriteOptimizer.DefaultTargetBytes]] file, so a compacting store
+    * writes it as one: past that size the write is untouched, and at
+    * production scale no state-sized shuffle is added. A commit decides
+    * from the current version's parquet bytes on disk, which the next
+    * version splices a batch into; optimizing the next version's plan a
+    * second time just for its size estimate cost 37-156 ms per table.
+    * Only a reset, with no version on disk, asks the optimizer. */
+  private def underOneFile(next: DataFrame, current: Option[String]): Boolean = {
+    val bytes = current.fold(next.queryExecution.optimizedPlan.stats.sizeInBytes)(dir =>
+      BigInt(Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum))
+    bytes < WriteOptimizer.DefaultTargetBytes
   }
 
   /** Exact row count of a just-written parquet state table from its file

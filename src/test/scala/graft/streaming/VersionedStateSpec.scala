@@ -129,6 +129,28 @@ class VersionedStateSpec extends SparkTestBase {
     assert(new LshAdmitMaintainer(spark, work).recover() == 1)
   }
 
+  test("an empty batch writes no version and leaves no cache") {
+    val gold = new GoldMaintainer(spark, "k", tmp("empty-gold"),
+      _.groupBy(col("k")).agg(sum(col("v")).as("total")))
+    gold.init(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    val index = new IndexMaintainer(spark, tmp("empty-index"))
+    index.init(Seq((1L, "spark index spark"), (2L, "index merge")).toDF("doc_id", "text"))
+    val lsh = new LshAdmitMaintainer(spark, tmp("empty-lsh"))
+    lsh.init(Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text"))
+    def state = (Seq(gold.fact, gold.gold, index.postingsState, index.index,
+      lsh.bands, lsh.shinglesState, lsh.sizes, lsh.decisions).map(rows),
+      Seq(gold.recover(), index.recover(), lsh.recover()))
+    val before = state
+    val held = persisted
+
+    gold.applyBatch(Seq.empty[(Long, Long)].toDF("k", "v"))
+    index.applyBatch(Seq.empty[(Long, String)].toDF("doc_id", "text"))
+    lsh.applyBatch(Seq.empty[(Long, String)].toDF("doc_id", "text"))
+    assert(persisted == held, s"leaked persisted RDDs: ${persisted -- held}")
+    assert(state == before)
+    assert(before._2 == Seq(0, 0, 0))
+  }
+
   test("the maintainers hold no state lifecycle of their own") {
     val main = Paths.get("src/main/scala/graft")
     assert(Files.isDirectory(main), s"run from the repo root: ${main.toAbsolutePath}")
